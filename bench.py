@@ -591,10 +591,12 @@ def _emit(
     del line["queries_norm_median"]
     del line["queries_spread"]
     out = json.dumps(line)
-    # round-trip guard: the emitted string must parse back to the
-    # exact payload — a silent encoding bug here would invalidate a
-    # whole round's PERF comparison, so fail loudly instead
-    if json.loads(out) != line:
+    # round-trip guard: the emitted string must parse back and
+    # re-serialise to itself — a silent encoding bug here would
+    # invalidate a whole round's PERF comparison, so fail loudly
+    # instead. Compared as strings: a NaN median never equals itself,
+    # so comparing the parsed objects would abort on any NaN
+    if json.dumps(json.loads(out)) != out:
         print(
             "# BENCH EMIT ERROR: one-line JSON does not round-trip",
             file=sys.stderr,

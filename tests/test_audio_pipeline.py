@@ -59,6 +59,19 @@ class TestCodec:
         assert sr2 == sr and len(y) == n
         assert abs(float(y.mean()) - 0.25) < 0.01  # (0.5 + 0)/2
 
+    def test_rewrite_never_truncates_an_open_reader(self, tmp_path):
+        # a reader mid-decode keeps the whole old file while a replayed
+        # stage rewrites the path; no temp file is left behind
+        p = str(tmp_path / "book.wav")
+        old = A.encode_wav(tone(440, 0.1, 16000), 16000)
+        new = A.encode_wav(tone(550, 0.2, 16000), 16000)
+        A._write_atomic(p, old)
+        with open(p, "rb") as reader:
+            A._write_atomic(p, new)
+            assert reader.read() == old
+        assert (tmp_path / "book.wav").read_bytes() == new
+        assert os.listdir(tmp_path) == ["book.wav"]
+
     def test_decode_audio_non_wav_is_gated(self):
         if A._soundfile is None:
             with pytest.raises(NotImplementedError):

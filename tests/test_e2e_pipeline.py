@@ -12,6 +12,8 @@ counts, duration bounds, metadata upsert contents (SURVEY §5).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,6 +103,8 @@ def pipeline_run(spark, tmp_path_factory):
     # --- stage 6: publish + metrics upsert (J3)
     out_ds = str(root / "dataset")
     published = P.publish_dataset(utterances, out_ds)
+    # the publish write is the first action: it ran concat and cut
+    wav_stamps = _wav_stamps(root)
     books_updated = merge_upsert(
         books,
         metrics.select(
@@ -124,7 +128,19 @@ def pipeline_run(spark, tmp_path_factory):
         "published": published,
         "books_updated": books_updated,
         "out_ds": out_ds,
+        "root": root,
+        "wav_stamps": wav_stamps,
     }
+
+
+def _wav_stamps(root) -> dict[str, tuple[int, int]]:
+    """(inode, mtime_ns) of every WAV the audio stages wrote."""
+    stamps = {}
+    for sub in ("book_wavs", "seg_wavs"):
+        for name in os.listdir(root / sub):
+            st = os.stat(root / sub / name)
+            stamps[f"{sub}/{name}"] = (st.st_ino, st.st_mtime_ns)
+    return stamps
 
 
 class TestEndToEnd:
@@ -178,3 +194,18 @@ class TestEndToEnd:
         assert upd["aaaa1111"].num_sentences > 0
         # untouched columns preserved
         assert upd["aaaa1111"].author == "A"
+
+    def test_each_audio_stage_runs_once(self, pipeline_run):
+        # the stages persist their output, so the actions after the
+        # publish write read cached rows and never rewrite a WAV
+        for key in (
+            "book_audio",
+            "segs",
+            "book_wer",
+            "kept_books",
+            "published",
+            "books_updated",
+        ):
+            pipeline_run[key].collect()
+        assert pipeline_run["wav_stamps"]
+        assert _wav_stamps(pipeline_run["root"]) == pipeline_run["wav_stamps"]

@@ -15,6 +15,15 @@ the next call for the same slot unpersists the previous DataFrame
 first. Callers that finish early can unpersist manually; everyone
 else is bounded by construction.
 
+The pipeline stages persist their outputs the same way, one slot per
+stage, so every action after the first reads the cached rows instead
+of replaying the stage's Python island and its file writes:
+
+- ``text_sentences``: ``pipeline.text_pipeline.process_text_stage``;
+- ``audio_concat``: ``pipeline.audio.concat_book_parts``;
+- ``alignment_segments``: ``pipeline.alignment.align_books``;
+- ``audio_cut``: ``pipeline.audio.cut_segments``.
+
 Single-flight-per-slot is a SEQUENTIAL contract: materialize (or
 abandon) a slot's DataFrame before the next call on the same slot —
 a second concurrent caller evicts the first mid-query, which is

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vnavc_spark.cache import tracked_persist
 from vnavc_spark.operators.filters import flag_duration_outliers
 
 #: aligner contract: (audio_duration_s, texts) → [(start, end), ...]
@@ -63,7 +64,13 @@ def align_books(
     ``book_audio``: (book_id, duration) from the audio stage. The
     join is broadcast when book_audio is small; the applyInPandas
     group holds one book's texts (bounded), never audio bytes —
-    real aligners read the WAV by path inside the UDF."""
+    real aligners read the WAV by path inside the UDF.
+
+    The result is persisted (MEMORY_AND_DISK) in the
+    ``alignment_segments`` slot, so the aligner runs once per book
+    however many actions read the segments (QC, publish and their
+    collects); the NEXT ``align_books`` call unpersists it. A caller
+    that is finished with the stage sooner can ``unpersist()`` it."""
     joined = groups.join(
         book_audio.select(book_col, F.col("duration").alias("_book_dur")),
         on=book_col,
@@ -86,7 +93,10 @@ def align_books(
             }
         )
 
-    return joined.groupBy(book_col).applyInPandas(_align, schema=ALIGN_SCHEMA)
+    return tracked_persist(
+        joined.groupBy(book_col).applyInPandas(_align, schema=ALIGN_SCHEMA),
+        "alignment_segments",
+    )
 
 
 def segments_with_outliers(

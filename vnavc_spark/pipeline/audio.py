@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vnavc_spark.cache import tracked_persist
+
 try:  # optional high-quality decoder/resampler
     import soundfile as _soundfile  # type: ignore
 except Exception:  # pragma: no cover
@@ -61,6 +63,17 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     if n_ch > 1:
         y = y.reshape(-1, n_ch).mean(axis=1)
     return y, sr
+
+
+def _write_atomic(path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` through a temp name in the same
+    directory, then ``os.replace`` it into place: a reader decoding
+    ``path`` while a replayed task rewrites it sees the old file or
+    the new one, never a truncated one."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.replace(tmp, path)
 
 
 def encode_wav(y: np.ndarray, sr: int) -> bytes:
@@ -332,7 +345,13 @@ def concat_book_parts(
 
     ``parts`` rows: (book_id, part_idx, path). Bytes are read inside
     the UDF (path-not-payload); one shuffle on book_id; skewed book
-    sizes split by AQE."""
+    sizes split by AQE.
+
+    The result is persisted (MEMORY_AND_DISK) in the ``audio_concat``
+    slot, so the book WAVs are decoded, resampled and written once
+    however many actions read it (the align and cut branches share
+    it); the NEXT ``concat_book_parts`` call unpersists it. A caller
+    that is finished with the stage sooner can ``unpersist()`` it."""
 
     def _concat(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(idx_col)
@@ -353,8 +372,7 @@ def concat_book_parts(
             ) if waves else total
             out_path = os.path.join(output_dir, f"{book}.wav")
             os.makedirs(output_dir, exist_ok=True)
-            with open(out_path, "wb") as fh:
-                fh.write(encode_wav(total, target_sr))
+            _write_atomic(out_path, encode_wav(total, target_sr))
         return pd.DataFrame(
             [
                 {
@@ -370,7 +388,10 @@ def concat_book_parts(
             ]
         )
 
-    return parts.groupBy(book_col).applyInPandas(_concat, schema=CONCAT_SCHEMA)
+    return tracked_persist(
+        parts.groupBy(book_col).applyInPandas(_concat, schema=CONCAT_SCHEMA),
+        "audio_concat",
+    )
 
 
 #: output schema of the segment-cut stage
@@ -388,7 +409,12 @@ def cut_segments(
     """A5 stage: cut per-utterance WAVs from each book's master WAV.
     Input rows: (book_id, seg_id, start, end, audio_path). Grouped by
     book so the master WAV is decoded ONCE per book, not per segment
-    (the reference re-opens it per ffmpeg call)."""
+    (the reference re-opens it per ffmpeg call).
+
+    The result is persisted (MEMORY_AND_DISK) in the ``audio_cut``
+    slot, so each segment WAV is written once however many actions
+    read it; the NEXT ``cut_segments`` call unpersists it. A caller
+    that is finished with the stage sooner can ``unpersist()`` it."""
 
     def _cut(pdf: pd.DataFrame) -> pd.DataFrame:
         book = pdf[book_col].iloc[0]
@@ -400,8 +426,7 @@ def cut_segments(
         for r in pdf.sort_values("seg_id").itertuples():
             seg = cut_segment(y, sr, r.start, r.end)
             path = os.path.join(output_dir, f"{book}_{r.seg_id}.wav")
-            with open(path, "wb") as fh:
-                fh.write(encode_wav(seg, sr))
+            _write_atomic(path, encode_wav(seg, sr))
             rows.append(
                 {
                     book_col: book,
@@ -413,7 +438,10 @@ def cut_segments(
             )
         return pd.DataFrame(rows)
 
-    return segments.groupBy(book_col).applyInPandas(_cut, schema=SEGMENT_SCHEMA)
+    return tracked_persist(
+        segments.groupBy(book_col).applyInPandas(_cut, schema=SEGMENT_SCHEMA),
+        "audio_cut",
+    )
 
 
 # ---------------------------------------------------------------------------
