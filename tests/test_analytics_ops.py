@@ -863,23 +863,6 @@ def test_trim_slots_is_lru_not_fifo(spark):
     C.clear_tracked()
 
 
-def test_slot_cap_env_parse_falls_back(monkeypatch):
-    """Round-14 (r13 ADVICE): a malformed $SPARK_GRAFT_PERSIST_SLOT_CAP
-    must not crash vnavc_spark.cache at import — the parse falls back
-    to the default, matching _cc_driver_edge_cap's stance."""
-    import importlib
-
-    from vnavc_spark import cache as C
-
-    monkeypatch.setenv("SPARK_GRAFT_PERSIST_SLOT_CAP", "not-an-int")
-    try:
-        mod = importlib.reload(C)
-        assert mod.SLOT_CAP == 32
-    finally:
-        monkeypatch.undo()
-        importlib.reload(C)
-
-
 def test_incremental_dau_chunk_guard_and_parity(spark, tmp_path):
     # >64 weekly chunks must fail fast (staging loop is driver-side);
     # and at a sane span the incremental result equals the batch

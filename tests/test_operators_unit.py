@@ -910,6 +910,26 @@ class TestExactRankSelect:
         got = {g: m for g, _n, m in seeded}
         assert got["c"] == 0.0 and got["a"] == 1.0
 
+    def test_mad_priors_reject_multi_target_state(self):
+        """A state with two targets per group would collapse to one
+        arbitrary target's ``lo``; mad_deviation_priors must refuse
+        it. The state is a plain dict, so no Spark session is used."""
+        import pytest
+
+        from vnavc_spark.operators.aggregates import mad_deviation_priors
+
+        def cell(lo):
+            return {"lo": lo, "hi": lo, "rank": 1, "n": 4, "nd": 4,
+                    "group": ("a",), "glo": 0, "ghi": 900}
+
+        one = {("ka", "median"): cell(300)}
+        assert mad_deviation_priors(one) == {
+            "ka": {"n": 4, "lo": 0, "hi": 602, "nd": 4, "group": ("a",)}
+        }
+        two = {("ka", "p25"): cell(200), ("ka", "p75"): cell(700)}
+        with pytest.raises(ValueError, match="more than one target"):
+            mad_deviation_priors(two)
+
     def test_priors_cardinality_cap_fails_fast(self, spark):
         import pytest
 

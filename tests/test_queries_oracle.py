@@ -176,3 +176,15 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) >= 0 and len(df.columns) >= 1
+
+
+def test_registry_contract_is_registration_order():
+    """``queries()`` / ``oracle_sql()`` return the registry in plain
+    registration order, and every oracle belongs to a registered
+    query. No Spark session is needed."""
+    import __spark_entry__ as entry_mod
+    from vnavc_spark import queries as qmod
+
+    assert list(entry_mod.queries()) == list(qmod.QUERIES)
+    assert list(entry_mod.oracle_sql()) == list(qmod.ORACLE)
+    assert set(qmod.ORACLE) <= set(qmod.QUERIES)

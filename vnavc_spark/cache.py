@@ -46,32 +46,7 @@ from pyspark.sql import DataFrame
 # and the socket-level failures of a dead gateway
 _REUSE_PROBE_EXPECTED = (Py4JError, PySparkException, ConnectionError)
 
-class _LruSlots(dict):
-    """Slot registry whose ``setdefault`` refreshes the key's recency
-    (pop + reinsert on an existing key), so :func:`trim_slots` evicts
-    the least-recently-TOUCHED slot rather than oldest-inserted. Both
-    of ``tracked_persist``'s paths go through ``setdefault`` — the
-    ``reuse_same_plan`` hit and the re-persist swap — so a slot kept
-    warm purely through reuse (the q124→q131 case) is no longer
-    evicted as "oldest" while colder, newer slots survive (r13 ADVICE).
-    Implemented as the registry's own type, NOT as logic inside
-    ``tracked_persist``: the certification fingerprints hash every
-    query's transitive dependency FUNCTION/CLASS sources, and an edit
-    to ``tracked_persist`` would rotate the entire persist-using
-    registry for a cache-hygiene change (same reasoning as
-    ``trim_slots`` below; an instance in a function's globals is not
-    part of its hashed closure)."""
-
-    def setdefault(self, key, default=None):
-        if key in self:
-            val = dict.pop(self, key)
-            self[key] = val
-            return val
-        self[key] = default
-        return default
-
-
-_SLOTS: dict[str, list] = _LruSlots()
+_SLOTS: dict[str, list] = {}
 _LOCK = threading.Lock()
 
 #: Default ceiling for :func:`trim_slots` — long sessions that run
@@ -79,30 +54,20 @@ _LOCK = threading.Lock()
 #: cache per slot NAME: ~100 live slots by the bench tail, real
 #: storage-memory pressure exactly where the heaviest queries run
 #: (q209's in-bench median ran 1.5x its fresh-session wall; round-13
-#: find). Override via $SPARK_GRAFT_PERSIST_SLOT_CAP; 0 disables.
-import os as _os
-
-try:
-    SLOT_CAP = int(_os.environ.get("SPARK_GRAFT_PERSIST_SLOT_CAP", "32"))
-except ValueError:
-    # malformed env value must not crash every import of this module
-    # (r13 ADVICE; matches _cc_driver_edge_cap's fallback stance)
-    SLOT_CAP = 32
+#: find).
+SLOT_CAP = 32
 
 
 def trim_slots(keep_n: int | None = None) -> int:
     """Unpersist all but the ``keep_n`` most-recently-TOUCHED
     tracked slots and return how many were evicted — session hygiene
     for long multi-query sessions (the bench calls this between
-    queries). Eviction is always correct (unpersist only drops the
-    cache; lineage recomputes); keeping the newest slots preserves
-    the adjacent-query plan reuse (q124→q131). Deliberately a
-    STANDALONE helper rather than logic inside ``tracked_persist``:
-    the certification fingerprints hash every query's transitive
-    dependency sources, and an edit to ``tracked_persist`` itself
-    would force the entire persist-using registry back through the
-    driver's 50-query certification window for a pure cache-hygiene
-    change."""
+    queries). ``keep_n`` defaults to :data:`SLOT_CAP`; 0 disables.
+    ``tracked_persist`` re-inserts every slot it touches, so the
+    registry's order is recency order. Eviction is always correct
+    (unpersist only drops the cache; lineage recomputes); keeping
+    the newest slots preserves the adjacent-query plan reuse
+    (q124→q131)."""
     if keep_n is None:
         keep_n = SLOT_CAP
     if keep_n <= 0:
@@ -156,7 +121,11 @@ def tracked_persist(
     from pyspark import StorageLevel
 
     with _LOCK:
-        prev = _SLOTS.setdefault(slot, [])
+        # re-insert on every touch — the reuse hit included — so
+        # trim_slots evicts the least-recently-USED slot: one kept
+        # warm purely through reuse (q124→q131) outlives colder,
+        # newer slots
+        prev = _SLOTS[slot] = _SLOTS.pop(slot, [])
         if reuse_same_plan and prev:
             # plan-aware reuse: queries built from a SHARED helper
             # (e.g. q124/q131's capped-basket items) produce the same

@@ -1219,17 +1219,25 @@ def mad_deviation_priors(state: dict) -> dict:
     loose bounds are sound, see ``_exact_ranks_core``. ``nd`` rides
     along as a planning upper bound (|v − med| maps each distinct
     value to at most one deviation, so distinct devs <= distinct
-    values)."""
-    return {
-        k: {
+    values). The state must carry ONE target per group (the median):
+    priors are per group, so a second target's ``lo`` would silently
+    overwrite the first — raises ``ValueError`` instead."""
+    priors = {}
+    for (k, tname), s in state.items():
+        if k in priors:
+            raise ValueError(
+                f"mad_deviation_priors: group {s['group']!r} carries "
+                f"more than one target (second: {tname!r}); pass the "
+                "state of a single-target median selection."
+            )
+        priors[k] = {
             "n": s["n"],
             "lo": 0,
             "hi": max(s["ghi"] - s["lo"], s["lo"] - s["glo"]) + 2,
             "nd": s["nd"],
             "group": s["group"],
         }
-        for (k, _t), s in state.items()
-    }
+    return priors
 
 
 def exact_rank_multi(

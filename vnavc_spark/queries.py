@@ -14001,385 +14001,10 @@ def q223_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registry accessors
 # ---------------------------------------------------------------------------
 
-# The driver certifies only the FIRST 50 registered queries per
-# round, so the accessors order the registry with not-yet-certified
-# queries first. The certified set is read from the driver's own
-# CORRECTNESS_r*.json artifacts at the repo root (hash-green rows, or
-# rows-only queries that have no oracle by design), so the rotation
-# maintains itself round over round; the literal set below is the
-# round-1/2 fallback for when those files aren't present. Every
-# certified query keeps its regression net in
-# tests/test_queries_oracle.py (all oracles, every round, sf0.001).
-def _certified_from_artifacts() -> frozenset[str]:
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    names: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:
-            continue
-        for k, v in data.items():
-            if isinstance(v, dict) and (
-                v.get("hash_match") is True or v.get("err") == "no_oracle"
-            ):
-                names.add(k)
-    return frozenset(names)
-
-
-_R2_CERTIFIED: frozenset[str] = frozenset({
-    "q01_region_revenue", "q02_substring_query", "q03_pricing_summary",
-    "q04_anti_join", "q05_semi_join", "q06_merge_upsert",
-    "q07_group_collect", "q08_weighted_ratio", "q09_flag_ratio",
-    "q10_rollup", "q11_window_first", "q12_exact_k_sample",
-    "q13_posexplode", "q14_natural_sort", "q15_null_drop",
-    "q16_between_outliers", "q17_chunk_ids", "q18_top_k", "q19_pivot",
-    "q20_union_dedup", "q21_duration_parse", "q22_slug_ids",
-    "q23_token_stats", "q24_jaccard_pairs", "q25_minhash_bands",
-    "q26_minhash_candidates", "q27_simhash", "q28_cosine_topk",
-    "q29_embedding_stats", "q30_lsh_ann", "q31_sessionize",
-    "q32_hourly_stats", "q33_minhash_dedup", "q34_not_contains",
-    "q35_json_extract", "q36_embedding_neardup", "q37_bpe_tokens",
-    "q38_stem_pairing", "q39_global_sample", "q40_quality_scores",
-    "q41_lang_id", "q42_percentiles", "q43_cube", "q44_distinct_counts",
-    "q45_ivf_ann", "q46_text_stage", "q47_approx_sketches",
-    "q48_embedding_neardup_lsh", "q49_simhash_neardup",
-    "q50_repetition_stats",
-})
-
-_DRIVER_CERTIFIED: frozenset[str] = _certified_from_artifacts() | _R2_CERTIFIED
-
-
-FP_REGIME = 2
-"""Fingerprint-regime version, stored in docs/CERT_FINGERPRINTS.json
-as ``__regime__``. Bump when the HASH FUNCTION changes (not when
-query code changes) so tools/update_fingerprints.py can distinguish
-"every hash differs because the regime changed" from "the code
-changed" and migrate unchanged-code entries without evidence of a
-fresh driver row. Regime history: 1 = query source + oracle SQL;
-2 = regime 1 + transitive vnavc_spark dependency closure (round-5
-verdict item #2: the pps_systematic guard changed q132's plan but
-not its regime-1 fingerprint, so its certification went stale)."""
-
-
-def _source_of(obj) -> str:
-    """Source text of a dependency object (monkeypatch seam for the
-    rotation tests — lets a test simulate an operator edit without
-    touching files)."""
-    import inspect
-
-    try:
-        return inspect.getsource(obj)
-    except (OSError, TypeError):
-        return repr(obj)
-
-
-def _code_names(code) -> set[str]:
-    """Global/attribute names referenced by a code object, including
-    nested lambdas / comprehensions / local defs."""
-    import types
-
-    names = set(code.co_names)
-    for c in code.co_consts:
-        if isinstance(c, types.CodeType):
-            names |= _code_names(c)
-    return names
-
-
-def dep_closure(fn) -> dict[str, str]:
-    """Transitive ``vnavc_spark.*`` dependency sources reachable from
-    ``fn``: {qualified name -> source text}.
-
-    Resolution is static-ish: the code object's referenced names are
-    looked up in the function's globals. Three cases are hashed:
-
-    - a directly referenced vnavc_spark function/class (``from m
-      import f`` style, or same-module helpers like
-      ``_brand_part_revenue``) — its source, recursively;
-    - an attribute reached through a referenced vnavc_spark MODULE
-      (``aggregates.exact_rank_multi`` style — queries.py's import
-      idiom): every referenced attribute name that resolves on that
-      module to a vnavc_spark function/class, recursively (attribute
-      names of OTHER objects may over-match; over-inclusion only
-      rotates more, never less);
-    - a referenced vnavc_spark module none of whose referenced
-      attributes resolved (dynamic getattr) — the whole module
-      source as a coarse fallback;
-    - function-LOCAL imports (``from vnavc_spark.x import y`` inside
-      the body — q132's idiom), found by an AST scan of the source,
-      resolved through importlib.
-
-    Class dependencies hash the class source and recurse into its
-    methods' own dependencies.
-    """
-    import inspect
-    import types
-
-    seen: set[int] = set()
-    out: dict[str, str] = {}
-
-    def visit_class(cls) -> None:
-        if id(cls) in seen:
-            return
-        seen.add(id(cls))
-        qual = f"{cls.__module__}.{cls.__qualname__}"
-        out.setdefault(qual, _source_of(cls))
-        for member in vars(cls).values():
-            if isinstance(member, (staticmethod, classmethod)):
-                member = member.__func__
-            if inspect.isfunction(member):
-                visit(member)
-
-    def visit_value(val, names) -> None:
-        import types
-
-        if isinstance(val, types.ModuleType):
-            mod_name = getattr(val, "__name__", "")
-            if not mod_name.startswith("vnavc_spark"):
-                return
-            hit = False
-            for attr in sorted(names):
-                av = getattr(val, attr, None)
-                if av is None:
-                    continue
-                am = getattr(av, "__module__", "") or ""
-                if not am.startswith("vnavc_spark"):
-                    continue
-                if inspect.isfunction(av):
-                    out.setdefault(f"{am}.{av.__qualname__}", _source_of(av))
-                    visit(av)
-                    hit = True
-                elif inspect.isclass(av):
-                    visit_class(av)
-                    hit = True
-            if not hit:
-                out.setdefault(mod_name, _source_of(val))
-            return
-        vm = getattr(val, "__module__", "") or ""
-        if not vm.startswith("vnavc_spark"):
-            return
-        if inspect.isfunction(val):
-            out.setdefault(f"{vm}.{val.__qualname__}", _source_of(val))
-            visit(val)
-        elif inspect.isclass(val):
-            visit_class(val)
-
-    def visit_local_imports(f, names) -> None:
-        """AST scan for vnavc_spark imports inside the body (local
-        imports never reach ``__globals__``)."""
-        import ast
-        import importlib
-        import textwrap
-
-        try:
-            tree = ast.parse(textwrap.dedent(_source_of(f)))
-        except SyntaxError:
-            return
-        pkg = (getattr(f, "__module__", "") or "").rsplit(".", 1)[0]
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom):
-                mod = "." * node.level + (node.module or "")
-                try:
-                    m = importlib.import_module(mod, package=pkg or None)
-                except Exception:
-                    continue
-                if not m.__name__.startswith("vnavc_spark"):
-                    continue
-                for alias in node.names:
-                    visit_value(getattr(m, alias.name, m), names)
-            elif isinstance(node, ast.Import):
-                for alias in node.names:
-                    if not alias.name.startswith("vnavc_spark"):
-                        continue
-                    try:
-                        m = importlib.import_module(alias.name)
-                    except Exception:
-                        continue
-                    visit_value(m, names)
-
-    def visit(f) -> None:
-        if id(f) in seen:
-            return
-        seen.add(id(f))
-        code = getattr(f, "__code__", None)
-        g = getattr(f, "__globals__", None)
-        if code is None or g is None:
-            return
-        names = _code_names(code)
-        visit_local_imports(f, names)
-        for nm in sorted(names):
-            if nm not in g:
-                continue
-            if g[nm] is fn:
-                continue
-            visit_value(g[nm], names)
-
-    visit(fn)
-    # the root's own source is already the regime-1 component
-    root_qual = (
-        f"{getattr(fn, '__module__', '')}.{getattr(fn, '__qualname__', '')}"
-    )
-    out.pop(root_qual, None)
-    return out
-
-
-_FP_CACHE: dict[tuple[str, int, str], str] = {}
-
-
-def impl_fingerprint(name: str) -> str:
-    """Implementation fingerprint of a registered query: sha256 of
-    the query function's SOURCE TEXT, its oracle SQL, AND the source
-    of every transitively reached vnavc_spark dependency
-    (``dep_closure``). A green driver row certifies one specific
-    implementation — if any of those change, the certification is
-    stale and the query rotates back into the driver window.
-    Regime 1 keyed on the query's own source alone, which round 5
-    showed is one level too shallow: editing a shared operator
-    (sampling.pps_systematic) changed q132's plan without rotating
-    it."""
-    import hashlib
-
-    fn = QUERIES[name]
-    oracle = ORACLE.get(name, "")
-    key = (name, id(fn), oracle)
-    cached = _FP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    src = _source_of(fn)
-    deps = dep_closure(fn)
-    h = hashlib.sha256()
-    h.update(src.encode("utf-8"))
-    h.update(b"\x00")
-    h.update(oracle.encode("utf-8"))
-    for qual in sorted(deps):
-        h.update(b"\x00")
-        h.update(qual.encode("utf-8"))
-        h.update(b"\x01")
-        h.update(deps[qual].encode("utf-8"))
-    fp = h.hexdigest()
-    _FP_CACHE[key] = fp
-    return fp
-
-
-def _impl_fingerprint_v1(name: str) -> str:
-    """Regime-1 fingerprint (query source + oracle only). Kept so
-    tools/update_fingerprints.py can prove, during a regime
-    migration, that a query's own code is unchanged since the old
-    snapshot and migrate its stamp without a fresh driver row."""
-    import hashlib
-    import inspect
-
-    src = inspect.getsource(QUERIES[name])
-    return hashlib.sha256(
-        (src + "\x00" + ORACLE.get(name, "")).encode("utf-8")
-    ).hexdigest()
-
-
-def _certified_fingerprints() -> dict[str, str]:
-    """Snapshot of each query's fingerprint AS OF its last green
-    driver row (docs/CERT_FINGERPRINTS.json, regenerated by
-    tools/update_fingerprints.py after each round's CORRECTNESS
-    artifact lands). Missing file → empty dict (legacy name-only
-    behavior via _certification_order's fallback)."""
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "docs", "CERT_FINGERPRINTS.json")
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-    except Exception:
-        return {}
-    return {k: v for k, v in data.items() if isinstance(v, str)}
-
-
-def _is_certified(
-    name: str,
-    certified_names: frozenset[str],
-    snapshot: dict[str, str],
-    current_fp: Callable[[str], str],
-) -> bool:
-    """A query is certified iff the driver has a green row for its
-    NAME and the snapshot fingerprint for that name matches the
-    CURRENT implementation — a re-implemented query sorts back into
-    the uncertified head even though its name already has a green
-    row. An empty snapshot (file absent) degrades to name-only."""
-    if name not in certified_names:
-        return False
-    if not snapshot:
-        return True
-    return snapshot.get(name) == current_fp(name)
-
-
-def _latest_green_round() -> dict[str, int]:
-    """Latest round number with a green driver row per query, scanned
-    once per process from CORRECTNESS_r*.json. Queries certified only
-    by the round-2 bootstrap set report age 2. Feeds the age-based
-    re-certification rotation: with all queries certified, the tail
-    would otherwise sit in registration order forever and an unedited
-    query might never re-enter the driver's 50-query window."""
-    global _GREEN_ROUND_CACHE
-    if _GREEN_ROUND_CACHE is not None:
-        return _GREEN_ROUND_CACHE
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {k: 2 for k in _R2_CERTIFIED}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:
-            continue
-        for k, v in data.items():
-            if isinstance(v, dict) and (
-                v.get("hash_match") is True or v.get("err") == "no_oracle"
-            ):
-                latest[k] = max(latest.get(k, 0), rnd)
-    _GREEN_ROUND_CACHE = latest
-    return latest
-
-
-_GREEN_ROUND_CACHE: dict[str, int] | None = None
-
-
-def _certification_order(names) -> list[str]:
-    """Uncertified queries first (the driver certifies the FIRST 50 of
-    ``queries()``), then the certified tail ordered OLDEST GREEN ROW
-    FIRST (round-9 verdict item #3) so leftover window slots
-    re-certify the stalest queries and every query re-enters the
-    window within ~⌈registry/50⌉ rounds. Ties (same round) keep
-    registration order — deterministic across processes."""
-    snapshot = _certified_fingerprints()
-    cert = {
-        k: _is_certified(k, _DRIVER_CERTIFIED, snapshot, impl_fingerprint)
-        for k in names
-    }
-    head = [k for k in names if not cert[k]]
-    age = _latest_green_round()
-    reg_idx = {k: i for i, k in enumerate(names)}
-    tail = sorted(
-        (k for k in names if cert[k]),
-        key=lambda k: (age.get(k, 0), reg_idx[k]),
-    )
-    return head + tail
-
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: QUERIES[k] for k in _certification_order(QUERIES)}
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
-    return {k: ORACLE[k] for k in _certification_order(ORACLE)}
+    return dict(ORACLE)
