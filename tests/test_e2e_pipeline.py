@@ -143,6 +143,24 @@ def _wav_stamps(root) -> dict[str, tuple[int, int]]:
     return stamps
 
 
+def _physical_nodes(df) -> list[str]:
+    """``simpleString`` of every physical operator a fresh query over
+    ``df`` plans to run (once run, adaptive execution may have pruned
+    a branch that came out empty). The plan a cached relation holds is
+    left out: an InMemoryTableScan reads the cached rows instead of
+    running that plan again."""
+    out, todo = [], [df.select("*")._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        out.append(node.simpleString(1000))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 class TestEndToEnd:
     def test_text_stage(self, pipeline_run):
         sents = pipeline_run["sents"].collect()
@@ -209,3 +227,14 @@ class TestEndToEnd:
             pipeline_run[key].collect()
         assert pipeline_run["wav_stamps"]
         assert _wav_stamps(pipeline_run["root"]) == pipeline_run["wav_stamps"]
+
+    def test_qc_scores_once(self, pipeline_run):
+        # score_transcripts persists its output: once book_wer has run
+        # the WER UDF, kept_books reads the cached scores
+        pipeline_run["book_wer"].collect()
+        nodes = _physical_nodes(pipeline_run["kept_books"])
+        assert any(n.startswith("InMemoryTableScan") for n in nodes)
+        # the WER UDF is the only Python island over the hypotheses
+        assert not any(
+            n.startswith("ArrowEvalPython") and "hypothesis#" in n for n in nodes
+        )

@@ -22,7 +22,8 @@ of replaying the stage's Python island and its file writes:
 - ``text_sentences``: ``pipeline.text_pipeline.process_text_stage``;
 - ``audio_concat``: ``pipeline.audio.concat_book_parts``;
 - ``alignment_segments``: ``pipeline.alignment.align_books``;
-- ``audio_cut``: ``pipeline.audio.cut_segments``.
+- ``audio_cut``: ``pipeline.audio.cut_segments``;
+- ``qc_scores``: ``pipeline.qc.score_transcripts``.
 
 Single-flight-per-slot is a SEQUENTIAL contract: materialize (or
 abandon) a slot's DataFrame before the next call on the same slot —

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from vnavc_spark.cache import tracked_persist
 from vnavc_spark.operators.aggregates import weighted_wer
 from vnavc_spark.operators.filters import wer_gate
 from vnavc_spark.operators.sampling import exact_k_per_group
@@ -42,29 +43,6 @@ def word_edit_distance(ref: str, hyp: str) -> int:
             )
         prev = cur
     return prev[-1]
-
-
-def word_errors_udf():
-    """Arrow-batched per-utterance word errors; inputs normalized the
-    way the reference normalizes before jiwer (lowercase transcript
-    cleaning). Built lazily — pandas UDF type parsing needs an active
-    SparkSession."""
-
-    @pandas_udf("int")
-    def _udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for refs, hyps in it:
-            yield pd.Series(
-                [
-                    word_edit_distance(
-                        process_transcript(r or "").lower(),
-                        process_transcript(h or "").lower(),
-                    )
-                    for r, h in zip(refs, hyps)
-                ],
-                dtype="int32",
-            )
-
-    return _udf
 
 
 def wer_counts_udf():
@@ -123,16 +101,24 @@ def score_transcripts(
 ) -> DataFrame:
     """Join sampled utterances with ASR hypotheses and compute
     per-utterance word errors + NORMALIZED-reference word counts
-    (one normalization pass produces both — see ``wer_counts_udf``)."""
+    (one normalization pass produces both — see ``wer_counts_udf``).
+
+    The result is persisted (MEMORY_AND_DISK) in the ``qc_scores``
+    slot, so the scoring UDF runs once per sampled utterance however
+    many actions read the scores (``book_wer`` and ``kept_books`` of
+    :func:`qc_gate`); the NEXT ``score_transcripts`` call unpersists
+    it. A caller that is finished with the stage sooner can
+    ``unpersist()`` it."""
     on = on or ["book_id", "seg_id"]
     joined = sampled.join(hypotheses, on=on)
-    return (
+    return tracked_persist(
         joined.withColumn(
             "_wer", wer_counts_udf()(F.col(ref_col), F.col(hyp_col))
         )
         .withColumn("word_errors", F.col("_wer.word_errors"))
         .withColumn("ref_words", F.col("_wer.ref_words"))
-        .drop("_wer")
+        .drop("_wer"),
+        "qc_scores",
     )
 
 

@@ -13,6 +13,14 @@ Defaults are chosen for the 100 TB posture (SURVEY.md §7):
   cluster this is overridden via env/conf (rule of thumb: 2-3× total
   executor cores, or rely on AQE coalescing from a high initial
   count).
+- local masters start the Python daemon through
+  ``vnavc_spark._pyworker``. Before every task pyspark's worker calls
+  ``importlib.invalidate_caches()``, and on CPython 3.10-3.12 that
+  re-reads ``pyspark.zip``'s 1,328-entry directory once per zip
+  importer (16 in a worker): 0.16 s of Python CPU per task on a
+  4-core host, where a warm 5-row pandas UDF action over 4 tasks took
+  0.46 s. The entry module re-reads an archive only when it has
+  changed; the same action then takes 0.17 s.
 """
 
 from __future__ import annotations
@@ -55,6 +63,16 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.ui.showConsoleProgress": "false",
 }
 
+#: Daemon entry for ``local`` masters, where the Python daemon is a
+#: child of this process. It skips the per-task re-read of
+#: ``pyspark.zip`` (0.16 s of worker CPU per task on CPython 3.11, see
+#: the module docstring). Other masters keep Spark's default daemon.
+LOCAL_DAEMON_MODULE = "vnavc_spark._pyworker"
+
+# the directory that holds the ``vnavc_spark`` package: the daemon
+# imports the entry module from it whatever this process's cwd is
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "vnavc-spark",
@@ -71,10 +89,10 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = "local[*]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master("local[*]")
 
     conf = dict(DEFAULT_CONF)
     if shuffle_partitions is None:
@@ -84,6 +102,10 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    if master is not None and (master == "local" or master.startswith("local[")):
+        conf.setdefault("spark.python.daemon.module", LOCAL_DAEMON_MODULE)
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (conf.get(key), _ENGINE_ROOT) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
