@@ -228,11 +228,15 @@ class TestTwinRegistry:
         from vnavc_spark.queries import QUERIES
         from vnavc_spark.streaming import ingest
 
+        from vnavc_spark.operators.mergeable import Spec
+
         assert len(ingest.TWINS) >= 14
         for name, info in ingest.TWINS.items():
-            # snapshot and start functions must exist and be callable
-            assert callable(getattr(ingest, info["snapshot"])), name
-            assert callable(getattr(ingest, info["start"])), name
+            # the spec factory builds a Spec with its defaults; a
+            # twin's own starter must exist and be callable
+            assert isinstance(info["spec"](), Spec), name
+            start = info.get("start", "start_partials")
+            assert callable(getattr(ingest, start)), name
             # every parity target is a registered query
             for q in info["batch"]:
                 assert q in QUERIES, (name, q)
@@ -243,6 +247,6 @@ class TestTwinRegistry:
 
         snaps = _monitor_snapshots()
         assert set(snaps) == set(ingest.TWINS)
-        for name, (fn, flags) in snaps.items():
-            assert fn == ingest.TWINS[name]["snapshot"]
+        for name, (spec, flags) in snaps.items():
+            assert spec is ingest.TWINS[name]["spec"]
             assert flags == tuple(ingest.TWINS[name]["flags"])

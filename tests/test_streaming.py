@@ -8,6 +8,7 @@ import json
 
 from pyspark.sql import functions as F
 
+from vnavc_spark.operators import aggregates, dedup, ordering
 from vnavc_spark.streaming import ingest
 
 
@@ -359,21 +360,19 @@ class TestStreamingCms:
         b1 = [{"tok": "hot"}] * 30 + [{"tok": f"c{i}"} for i in range(20)]
         b2 = [{"tok": "hot"}] * 30 + [{"tok": f"d{i}"} for i in range(20)]
         _write_batch(src, "b1.json", b1)
-        q = ingest.start_streaming_cms(
+        q = ingest.start_partials(
             self._stream_tokens(spark, src),
             str(tmp_path / "cells"),
             str(tmp_path / "ckpt"),
-            width=64,
-            depth=2,
+            aggregates.cms_spec(width=64, depth=2),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", b2)
-        q = ingest.start_streaming_cms(
+        q = ingest.start_partials(
             self._stream_tokens(spark, src),
             str(tmp_path / "cells"),
             str(tmp_path / "ckpt"),
-            width=64,
-            depth=2,
+            aggregates.cms_spec(width=64, depth=2),
         )
         q.awaitTermination(60)
 
@@ -385,8 +384,8 @@ class TestStreamingCms:
         # cumulative streamed sketch == one-shot batch sketch
         snap = {
             (r.seed, r.bucket): r.est
-            for r in ingest.cms_cells_snapshot(
-                spark, str(tmp_path / "cells")
+            for r in ingest.snapshot(
+                spark, str(tmp_path / "cells"), aggregates.cms_spec()
             ).collect()
         }
         ref = {
@@ -424,8 +423,8 @@ class TestStreamingCms:
             ).parquet(dst)
         snap = {
             (r.seed, r.bucket): r.est
-            for r in ingest.cms_cells_snapshot(
-                spark, str(tmp_path / "cells")
+            for r in ingest.snapshot(
+                spark, str(tmp_path / "cells"), aggregates.cms_spec()
             ).collect()
         }
         ref = {
@@ -473,19 +472,25 @@ class TestWindowedTopK:
         )
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
-        q = ingest.start_windowed_type_counts(stream, partials, ckpt)
+        q = ingest.start_partials(
+            stream, partials, ckpt, ordering.window_topk_spec()
+        )
         q.awaitTermination(60)
         # batch 2: remainder + the late hour-0 row at the end
         _write_batch(src, "b2.json", rows[60:])
         stream2 = ingest.read_json_stream(
             spark, str(src), schema=ingest.EVENT_STREAM_SCHEMA
         )
-        q2 = ingest.start_windowed_type_counts(stream2, partials, ckpt)
+        q2 = ingest.start_partials(
+            stream2, partials, ckpt, ordering.window_topk_spec()
+        )
         q2.awaitTermination(60)
 
         got = sorted(
             tuple(r)
-            for r in ingest.windowed_topk_snapshot(spark, partials).collect()
+            for r in ingest.snapshot(
+                spark, partials, ordering.window_topk_spec()
+            ).collect()
         )
 
         # batch reference: the SAME rows as an events table through
@@ -534,7 +539,9 @@ class TestWindowedTopK:
                 .write.mode("overwrite")
                 .parquet(f"{partials}/batch_id=0")
             )
-        out = ingest.windowed_topk_snapshot(spark, partials).collect()
+        out = ingest.snapshot(
+            spark, partials, ordering.window_topk_spec()
+        ).collect()
         assert [(r.event_type, r.n_events, r.rk) for r in out] == [
             ("click", 1, 1)
         ]
@@ -574,27 +581,31 @@ class TestStreamingKsDrift:
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "b1.json", rows[:70])
-        q = ingest.start_length_histograms(
+        q = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.ks_drift_spec(),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", rows[70:])
-        q2 = ingest.start_length_histograms(
+        q2 = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.ks_drift_spec(),
         )
         q2.awaitTermination(60)
 
         got = sorted(
             tuple(r)
-            for r in ingest.ks_drift_snapshot(spark, partials).collect()
+            for r in ingest.snapshot(
+                spark, partials, ordering.ks_drift_spec()
+            ).collect()
         )
 
         sf_dir = tmp_path / "sf"
@@ -669,25 +680,27 @@ class TestStreamingContamination:
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "b1.json", train_rows[:20])
-        q = ingest.start_contamination_screen(
+        q = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
-            bench_hashes, partials, ckpt,
+            partials, ckpt, dedup.contamination_spec(bench_hashes),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", train_rows[20:])
-        q2 = ingest.start_contamination_screen(
+        q2 = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
-            bench_hashes, partials, ckpt,
+            partials, ckpt, dedup.contamination_spec(bench_hashes),
         )
         q2.awaitTermination(60)
 
         got = sorted(
             tuple(r)
-            for r in ingest.contamination_snapshot(spark, partials).collect()
+            for r in ingest.snapshot(
+                spark, partials, dedup.contamination_spec()
+            ).collect()
         )
 
         from vnavc_spark.queries import QUERIES
@@ -829,28 +842,30 @@ class TestStreamingScoreSeparation:
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "b1.json", rows[:80])
-        q = ingest.start_label_histograms(
+        q = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.score_separation_spec(),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", rows[80:])
-        q2 = ingest.start_label_histograms(
+        q2 = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.score_separation_spec(),
         )
         q2.awaitTermination(60)
 
         got = sorted(
             tuple(r)
-            for r in ingest.score_separation_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, ordering.score_separation_spec()
             ).collect()
         )
 
@@ -904,28 +919,30 @@ class TestStreamingQuantileDrift:
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "b1.json", rows[:90])
-        q = ingest.start_length_histograms(
+        q = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.ks_drift_spec(),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", rows[90:])
-        q2 = ingest.start_length_histograms(
+        q2 = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            ordering.ks_drift_spec(),
         )
         q2.awaitTermination(60)
 
         got = sorted(
             tuple(r)
-            for r in ingest.quantile_drift_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, ordering.quantile_drift_spec()
             ).collect()
         )
 
@@ -982,26 +999,31 @@ class TestStreamingHhi:
         partials = str(tmp_path / "partials")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "b1.json", rows[:50])
-        q = ingest.start_mass_partials(
+        q = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            aggregates.hhi_spec(),
         )
         q.awaitTermination(60)
         _write_batch(src, "b2.json", rows[50:])
-        q2 = ingest.start_mass_partials(
+        q2 = ingest.start_partials(
             ingest.read_json_stream(
                 spark, str(src), schema=ingest.DOC_STREAM_SCHEMA
             ),
             partials,
             ckpt,
+            aggregates.hhi_spec(),
         )
         q2.awaitTermination(60)
 
         got = sorted(
-            tuple(r) for r in ingest.hhi_snapshot(spark, partials).collect()
+            tuple(r)
+            for r in ingest.snapshot(
+                spark, partials, aggregates.hhi_spec()
+            ).collect()
         )
 
         sf_dir = tmp_path / "sf"
@@ -1037,24 +1059,24 @@ class TestStreamingHhi:
             [("en", "web", 100), ("en", "books", 300), ("de", "web", 50)],
             "lang string, source string, n_chars long",
         )
-        (
-            df.groupBy("lang", "source")
-            .agg(F.sum("n_chars").cast("long").alias("mass"))
-            .write.mode("overwrite")
-            .parquet(f"{partials}/batch_id=0")
+        aggregates.hhi_spec().partial(df).write.mode("overwrite").parquet(
+            f"{partials}/batch_id=0"
         )
         once = sorted(
-            tuple(r) for r in ingest.hhi_snapshot(spark, partials).collect()
+            tuple(r)
+            for r in ingest.snapshot(
+                spark, partials, aggregates.hhi_spec()
+            ).collect()
         )
         # replay batch 0 (same rows)
-        (
-            df.groupBy("lang", "source")
-            .agg(F.sum("n_chars").cast("long").alias("mass"))
-            .write.mode("overwrite")
-            .parquet(f"{partials}/batch_id=0")
+        aggregates.hhi_spec().partial(df).write.mode("overwrite").parquet(
+            f"{partials}/batch_id=0"
         )
         again = sorted(
-            tuple(r) for r in ingest.hhi_snapshot(spark, partials).collect()
+            tuple(r)
+            for r in ingest.snapshot(
+                spark, partials, aggregates.hhi_spec()
+            ).collect()
         )
         assert once == again
 
@@ -1158,19 +1180,19 @@ class TestBenfordTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_digit_mass_partials(
+            q = ingest.start_partials(
                 spark.readStream.schema(
                     "o_orderkey long, seg string, o_totalprice double"
                 ).json(str(src)),
                 partials,
                 ckpt,
-                group_col="seg",
+                aggregates.benford_summation_spec(),
             )
             q.awaitTermination(60)
         got = sorted(
             tuple(r)
-            for r in ingest.benford_summation_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, aggregates.benford_summation_spec()
             ).collect()
         )
         want = sorted(
@@ -1227,7 +1249,7 @@ class TestEventsAucTwin:
     (queries.q203): the stream pre-projects events to (event_type,
     cents, weekend-label) — q203's exact projection — stages the same
     additive class-conditional histograms, and the parameterized
-    score_separation_snapshot reproduces the batch query."""
+    score-separation spec's snapshot reproduces the batch query."""
 
     def test_snapshot_equals_batch_q203_on_real_events(
         self, spark, tmp_path
@@ -1283,7 +1305,7 @@ class TestEventsAucTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_label_histograms(
+            q = ingest.start_partials(
                 project(
                     spark.readStream.schema(
                         ingest.EVENT_STREAM_SCHEMA
@@ -1291,16 +1313,17 @@ class TestEventsAucTwin:
                 ),
                 partials,
                 ckpt,
-                source_col="event_type",
-                len_col="cents",
-                label_col="wk",
-                pos_value="we",
+                ordering.score_separation_spec(
+                    group="event_type", value="cents", label="wk", pos="we"
+                ),
             )
             q.awaitTermination(60)
         got = sorted(
             tuple(r)
-            for r in ingest.score_separation_snapshot(
-                spark, partials, group_col="event_type", value_col="cents"
+            for r in ingest.snapshot(
+                spark,
+                partials,
+                ordering.score_separation_spec(group="event_type", value="cents"),
             ).collect()
         )
         want = sorted(
@@ -1317,8 +1340,10 @@ class TestEventsAucTwin:
         # different count tables)
         got_ap = sorted(
             tuple(r)
-            for r in ingest.average_precision_snapshot(
-                spark, partials, group_col="event_type", value_col="cents"
+            for r in ingest.snapshot(
+                spark,
+                partials,
+                ordering.average_precision_spec(group="event_type", value="cents"),
             ).collect()
         )
         want_ap = sorted(
@@ -1366,18 +1391,19 @@ class TestEventsAucTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_session_span_partials(
+            q = ingest.start_partials(
                 spark.readStream.schema(
                     ingest.EVENT_STREAM_SCHEMA
                 ).json(str(src)),
                 partials,
                 ckpt,
+                aggregates.session_survival_spec(),
             )
             q.awaitTermination(60)
         got = sorted(
             tuple(r)
-            for r in ingest.session_survival_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, aggregates.session_survival_spec()
             ).collect()
         )
         want = sorted(
@@ -1443,7 +1469,7 @@ class TestEventsAucTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_label_histograms(
+            q = ingest.start_partials(
                 project(
                     spark.readStream.schema(
                         ingest.EVENT_STREAM_SCHEMA
@@ -1451,14 +1477,13 @@ class TestEventsAucTwin:
                 ),
                 partials,
                 ckpt,
-                source_col="g",
-                len_col="cents",
-                label_col="nt",
-                pos_value="n1",
+                ordering.score_separation_spec(
+                    group="g", value="cents", label="nt", pos="n1"
+                ),
             )
             q.awaitTermination(60)
-        snap = ingest.score_separation_snapshot(
-            spark, partials, group_col="g", value_col="cents"
+        snap = ingest.snapshot(
+            spark, partials, ordering.score_separation_spec(group="g", value="cents")
         ).select(
             F.substring_index("g", "\x1f", 1).alias("event_type"),
             F.substring_index("g", "\x1f", -1)
@@ -1593,9 +1618,9 @@ class TestHllSketchTwin:
             f"{partials}/vals/batch_id=0"
         )
         with pytest.raises(ValueError, match="staged at a larger b"):
-            ingest.hll_snapshot(spark, partials, b=4).collect()
+            ingest.snapshot(spark, partials, aggregates.hll_spec(b=4)).collect()
         # the correct b still serves
-        assert len(ingest.hll_snapshot(spark, partials, b=6).collect()) == 1
+        assert len(ingest.hll_snapshot(spark, partials).collect()) == 1
 
 
 class TestKmvSketchTwin:
@@ -1657,7 +1682,7 @@ class TestKmvSketchTwin:
 
 class TestNameLinkageTwin:
     """queries.q202's streaming twin: per-batch additive (nm, n_recs)
-    count partials (start_name_counts) summed at snapshot time into
+    count partials (dedup.name_linkage_spec) summed at snapshot time into
     the shared dedup.name_linkage_pairs core — snapshot == batch
     identity on the REAL sf0.001 customer table, with exact-duplicate
     names split ACROSS batches to prove the entity collapse happens
@@ -1693,18 +1718,19 @@ class TestNameLinkageTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_name_counts(
+            q = ingest.start_partials(
                 spark.readStream.schema(
                     "c_custkey long, c_name string"
                 ).json(str(src)),
                 partials,
                 ckpt,
+                dedup.name_linkage_spec(),
             )
             q.awaitTermination(60)
         got = sorted(
             tuple(r)
-            for r in ingest.name_linkage_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.name_linkage_spec()
             ).collect()
         )
         want = sorted(
@@ -1732,8 +1758,8 @@ class TestNameLinkageTwin:
             ).parquet(f"{partials}/batch_id={bid}")
         out = {
             (r.name_a, r.name_b): (r.n_recs_a, r.n_recs_b, r.dist)
-            for r in ingest.name_linkage_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.name_linkage_spec()
             ).collect()
         }
         assert out == {("alice coopar", "alice cooper"): (1, 2, 1)}, out
@@ -1763,7 +1789,7 @@ class TestNameLinkageTwin:
             ).agg(F.count("*").cast("long").alias("n_recs")).write.mode(
                 "overwrite"
             ).parquet(f"{partials}/batch_id={bid}")
-        snap = ingest.name_linkage_snapshot(spark, partials, radius=2)
+        snap = ingest.snapshot(spark, partials, dedup.name_linkage_spec(radius=2))
         got = sorted(
             tuple(r)
             for r in snap.groupBy("dist")
@@ -1820,19 +1846,20 @@ class TestKAnonymityTwin:
                 sorted(_glob.glob(str(part / "*.json")))
             ):
                 _shutil.copy(f, src / f"half{i}_{j}.json")
-            q = ingest.start_qi_class_counts(
+            q = ingest.start_partials(
                 spark.readStream.schema(
                     "c_custkey long, c_nationkey long, "
                     "c_mktsegment string, c_acctbal double"
                 ).json(str(src)),
                 partials,
                 ckpt,
+                aggregates.k_anonymity_spec(),
             )
             q.awaitTermination(60)
         got = sorted(
             tuple(r)
-            for r in ingest.k_anonymity_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, aggregates.k_anonymity_spec()
             ).collect()
         )
         want = sorted(
@@ -1856,8 +1883,8 @@ class TestKAnonymityTwin:
             )
         out = [
             tuple(r)
-            for r in ingest.k_anonymity_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, aggregates.k_anonymity_spec()
             ).collect()
         ]
         assert out == [(7, 1, 6, 0, 0)], out
@@ -1900,8 +1927,8 @@ class TestFellegiSunterTwin:
             )
         got = sorted(
             tuple(r)
-            for r in ingest.fellegi_sunter_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.fellegi_sunter_spec()
             ).collect()
         )
         want = sorted(
@@ -1936,8 +1963,8 @@ class TestFellegiSunterTwin:
                 r.n_agree_balband,
                 r.sum_weight,
             )
-            for r in ingest.fellegi_sunter_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.fellegi_sunter_spec()
             ).collect()
         }
         # one d=1 pair, all three attrs agree (nation merged to 7 on
@@ -1981,8 +2008,8 @@ class TestAgreementPatternsTwin:
             )
         got = sorted(
             tuple(r)
-            for r in ingest.agreement_patterns_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.agreement_patterns_spec()
             ).collect()
         )
         want = sorted(
@@ -2030,8 +2057,8 @@ class TestEntityClustersTwin:
             )
         got = sorted(
             tuple(r)
-            for r in ingest.entity_clusters_snapshot(
-                spark, partials
+            for r in ingest.snapshot(
+                spark, partials, dedup.entity_clusters_spec()
             ).collect()
         )
         want = sorted(
@@ -2039,3 +2066,122 @@ class TestEntityClustersTwin:
             for r in QUERIES["q209_entity_clusters"](spark, sf).collect()
         )
         assert got == want and len(got) >= 2, (got, want)
+
+
+class TestSharedPartialsPath:
+    """The generic twin path, written once against a toy spec: every
+    twin's replay and batch-path properties live in ``start_partials``,
+    ``snapshot`` and ``Spec.batch``."""
+
+    @staticmethod
+    def _count_spec(merge=None):
+        from vnavc_spark.operators.mergeable import Spec, merge_by
+
+        return Spec(
+            lambda rows: rows.groupBy("k").agg(
+                F.count("*").cast("long").alias("n")
+            ),
+            merge or merge_by("k"),
+            lambda m: m.select("k", (F.col("n") * 10).alias("n10")),
+        )
+
+    def test_replayed_batch_overwrites_only_its_own_partial(
+        self, spark, tmp_path
+    ):
+        import os
+
+        spec = self._count_spec()
+        src = tmp_path / "in"
+        src.mkdir()
+        partials = str(tmp_path / "partials")
+        ckpt = str(tmp_path / "ckpt")
+
+        def run():
+            q = ingest.start_partials(
+                spark.readStream.schema("k string").json(str(src)),
+                partials,
+                ckpt,
+                spec,
+            )
+            q.awaitTermination(60)
+            assert q.exception() is None
+
+        _write_batch(src, "b0.json", [{"k": "a"}, {"k": "a"}, {"k": "b"}])
+        run()
+        _write_batch(src, "b1.json", [{"k": "a"}, {"k": "c"}])
+        run()
+        snap = lambda: sorted(  # noqa: E731
+            tuple(r) for r in ingest.snapshot(spark, partials, spec).collect()
+        )
+        before = snap()
+        assert before == [("a", 30), ("b", 10), ("c", 10)]
+        b0 = sorted(os.listdir(f"{partials}/batch_id=0"))
+        b1 = sorted(os.listdir(f"{partials}/batch_id=1"))
+        # a crash after batch 1's write but before its commit: the
+        # restarted query re-runs batch id 1 over the same offsets
+        for f in ("1", ".1.crc"):
+            os.remove(os.path.join(ckpt, "commits", f))
+        run()
+        assert sorted(os.listdir(partials)) == ["batch_id=0", "batch_id=1"]
+        assert sorted(os.listdir(f"{partials}/batch_id=0")) == b0
+        assert sorted(os.listdir(f"{partials}/batch_id=1")) != b1
+        assert snap() == before
+
+    def test_batch_path_never_calls_merge(self, spark):
+        def refuse(staged):
+            raise AssertionError("the batch path must not merge")
+
+        spec = self._count_spec(merge=refuse)
+        rows = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
+        assert sorted(tuple(r) for r in spec.batch(rows).collect()) == [
+            ("a", 20),
+            ("b", 10),
+        ]
+
+
+def test_twa_missing_carry_state_raises_before_writing(spark, tmp_path):
+    """TWINS["twa"] guard: batch N > 0 whose batch N-1 carry state is
+    missing fails the query instead of dropping the carried open
+    intervals, and writes no partial for batch N."""
+    import os
+    import shutil
+
+    import pytest
+
+    src = tmp_path / "in"
+    src.mkdir()
+    partials = str(tmp_path / "partials")
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    rows = [
+        {
+            "event_id": i,
+            "ts": f"2024-01-01T00:0{i}:00",
+            "user_id": i % 2,
+            "event_type": "view",
+            "value": 1.5 * i,
+        }
+        for i in range(6)
+    ]
+
+    def start():
+        return ingest.start_twa_partials(
+            ingest.read_json_stream(
+                spark, str(src), schema=ingest.EVENT_STREAM_SCHEMA
+            ),
+            partials,
+            state,
+            ckpt,
+        )
+
+    _write_batch(src, "b0.json", rows[:3])
+    q = start()
+    q.awaitTermination(60)
+    assert q.exception() is None
+    shutil.rmtree(f"{state}/batch_id=0")
+    _write_batch(src, "b1.json", rows[3:])
+    q = start()
+    with pytest.raises(Exception):
+        q.awaitTermination(60)
+    assert q.exception() is not None
+    assert not os.path.exists(f"{partials}/batch_id=1")

@@ -29,19 +29,22 @@ def render() -> str:
         "from the same registry, so this doc and the CLI agree by",
         "construction.",
         "",
-        "Every twin follows the staged-partials pattern: the stream",
-        "side (`start_*`) writes a small ADDITIVE (or per-doc) partial",
-        "per micro-batch under `partials/batch_id=N` — a replayed",
-        "batch id overwrites its own partial in place, so delivery is",
-        "effectively exactly-once; the snapshot side recomputes the",
-        "batch query's exact output from the summed partials on",
-        "demand (streaming == batch is an identity, parity-tested in",
+        "Every twin is one mergeable-partial spec `(partial, merge,",
+        "finalize)` (`vnavc_spark/operators/mergeable.py`) that its",
+        "batch query also runs as `finalize(partial(table))`. The",
+        "stream side (`ingest.start_partials`, or the listed starter)",
+        "writes `spec.partial` of each micro-batch under",
+        "`partials/batch_id=N` — a replayed batch id overwrites its",
+        "own partial in place, so delivery is effectively",
+        "exactly-once; the snapshot side (`ingest.snapshot`) returns",
+        "`finalize(merge(staged partials))`, the batch query's exact",
+        "output (streaming == batch is an identity, parity-tested in",
         "tests/test_streaming.py / test_stateful_streaming.py).",
         "Recompute any readout with:",
         "",
         "    python -m vnavc_spark monitor <twin> --partials <dir> [flags]",
         "",
-        "| Twin | Batch query (parity target) | Staged partials | Stream fn | Snapshot fn | Tuning flags |",
+        "| Twin | Batch query (parity target) | Staged partials | Stream fn | Spec | Tuning flags |",
         "|---|---|---|---|---|---|",
     ]
     for name, info in sorted(TWINS.items()):
@@ -51,9 +54,12 @@ def render() -> str:
             else "—"
         )
         batch = ", ".join(info["batch"])
+        spec = info["spec"]
+        spec = f"{spec.__module__.rsplit('.', 1)[-1]}.{spec.__name__}"
+        start = info.get("start", "start_partials")
         lines.append(
             f"| {name} | {batch} | {info['partials']} | "
-            f"`{info['start']}` | `{info['snapshot']}` | {flags} |"
+            f"`{start}` | `{spec}` | {flags} |"
         )
     lines += [
         "",
@@ -70,7 +76,7 @@ def render() -> str:
         "   twins — the snapshot is the batch query over the data",
         "   that IS staged, not an error. Detection is the replay",
         "   path: re-delivering batch N through the same",
-        "   `foreachBatch` checkpoint rewrites `batch_id=N` in",
+        "   checkpoint rewrites `batch_id=N` in",
         "   place (mode=overwrite per batch directory), after which",
         "   the snapshot is exact again. Nothing ever needs a",
         "   from-scratch restage.",

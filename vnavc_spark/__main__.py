@@ -208,16 +208,17 @@ def cmd_verify(args) -> int:
     return 1 if n_fail else 0
 
 
-def _monitor_snapshots() -> dict[str, tuple[str, tuple[str, ...]]]:
+def _monitor_snapshots() -> dict[str, tuple]:
     """Monitor command table, derived from the single-authority twin
     registry (``streaming.ingest.TWINS`` — also the source of
     docs/MONITORS.md via tools/gen_monitors.py, so the CLI and the
-    doc cannot drift). Lazy: importing ingest pulls pyspark, which
-    `vnavc_spark list` shouldn't pay for."""
+    doc cannot drift): twin -> (spec factory, tuning flags). Lazy:
+    importing ingest pulls pyspark, which `vnavc_spark list`
+    shouldn't pay for."""
     from vnavc_spark.streaming.ingest import TWINS
 
     return {
-        name: (info["snapshot"], tuple(info["flags"]))
+        name: (info["spec"], tuple(info["flags"]))
         for name, info in TWINS.items()
     }
 
@@ -227,9 +228,10 @@ def cmd_monitor(args) -> int:
 
     snapshots = _monitor_snapshots()
     if args.twin == "list":
-        for name, (fn, flags) in sorted(snapshots.items()):
+        for name, (spec, flags) in sorted(snapshots.items()):
             extra = f"  [--{' --'.join(flags)}]" if flags else ""
-            print(f"{name:18s} ingest.{fn}{extra}")
+            module = spec.__module__.rsplit(".", 1)[-1]
+            print(f"{name:18s} {module}.{spec.__name__}{extra}")
         return 0
     if args.twin not in snapshots:
         print(
@@ -240,16 +242,14 @@ def cmd_monitor(args) -> int:
     if not args.partials:
         print("--partials is required for a snapshot", file=sys.stderr)
         return 2
-    fn_name, flags = snapshots[args.twin]
+    spec, flags = snapshots[args.twin]
     # a tuning flag the chosen twin doesn't accept is a user error
     # (e.g. `monitor benford --k 5`): error loudly instead of silently
     # dropping it and printing a readout the flag never influenced.
     # The flag universe derives from the registry (not a hardcoded
     # tuple) so a future twin's new flag can't silently re-open the
     # drop-it hole.
-    from vnavc_spark.streaming.ingest import TWINS
-
-    universe = sorted({f for info in TWINS.values() for f in info["flags"]})
+    universe = sorted({f for _, fl in snapshots.values() for f in fl})
     stray = [
         f"--{f}"
         for f in universe
@@ -265,20 +265,11 @@ def cmd_monitor(args) -> int:
             file=sys.stderr,
         )
         return 2
-    kwargs = {}
-    if "k" in flags and args.k is not None:
-        kwargs["k"] = args.k
-    if "b" in flags and args.b is not None:
-        kwargs["b"] = args.b
-    if "radius" in flags and args.radius is not None:
-        kwargs["radius"] = args.radius
-    if "group" in flags and args.group is not None:
-        kwargs["group_col"] = args.group
-    if "value" in flags and args.value is not None:
-        kwargs["value_col"] = args.value
+    # each flag is a keyword of the twin's spec factory
+    kwargs = {f: getattr(args, f) for f in flags if getattr(args, f) is not None}
     spark = _spark(args)
     spark.sparkContext.setLogLevel("ERROR")
-    getattr(ingest, fn_name)(spark, args.partials, **kwargs).show(
+    ingest.snapshot(spark, args.partials, spec(**kwargs)).show(
         args.limit, truncate=False
     )
     return 0

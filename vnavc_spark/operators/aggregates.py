@@ -15,6 +15,8 @@ import time
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vnavc_spark.operators.mergeable import Spec, distinct_merge, merge_by
+
 
 def parts_by_book(
     df: DataFrame,
@@ -261,8 +263,26 @@ def hll_deterministic(
     # only nulls yields NULL instead of estimate 0). Any future
     # oracle over a nullable key must mirror `WHERE col IS NOT NULL`.
     df = df.filter(F.col(value_col).isNotNull())
-    regs = hll_register_maxima(df, group_cols, value_col, b)
-    ex = df.groupBy(*group_cols).agg(
+    return _hll_readout(
+        hll_register_maxima(df, group_cols, value_col, b),
+        df,
+        group_cols,
+        value_col,
+        b,
+    )
+
+
+def _hll_readout(
+    regs: DataFrame,
+    vals: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    b: int,
+) -> DataFrame:
+    """Estimate from a register table plus the exact anchor
+    (countDistinct over ``vals``) — shared by :func:`hll_deterministic`
+    and :func:`hll_spec`'s finalize."""
+    ex = vals.groupBy(*group_cols).agg(
         F.countDistinct(value_col).cast("long").alias("n_exact")
     )
     return hll_estimate_from_registers(regs, group_cols, b).join(
@@ -283,7 +303,7 @@ def hll_register_maxima(
     b: int = 6,
 ) -> DataFrame:
     """The register half of :func:`hll_deterministic`, factored so
-    the streaming twin (ingest.start_hll_register_partials) stages
+    the streaming twin (:func:`hll_spec`) stages
     the SAME (group, _reg, _M) register maxima per batch — register
     max is associative/commutative, so per-batch maxima max-merge to
     the corpus registers exactly (the mergeable-sketch identity).
@@ -318,7 +338,7 @@ def hll_estimate_from_registers(
     harmonic accumulation over a (group, _reg, _M) register table —
     exact integer state, one terminal IEEE division by the
     Python-formatted alpha literal. Shared by the batch core and the
-    streaming snapshot (ingest.hll_snapshot), which max-merges staged
+    streaming snapshot (:func:`hll_spec`), which max-merges staged
     per-batch register partials into the same table first."""
     from vnavc_spark.functions.portable import stable_round
 
@@ -1528,7 +1548,7 @@ def cms_cells(
     est) table — at most ``depth·width`` rows regardless of corpus or
     vocabulary size, and ADDITIVE: sketches of two corpus slices
     merge by summing ``est`` per (seed, bucket), which is what the
-    streaming path exploits (streaming/ingest.start_streaming_cms)."""
+    streaming path exploits (:func:`cms_spec`)."""
     t = F.col(token_col)
     return (
         tok_df.select(
@@ -1895,7 +1915,7 @@ def benford_gate_from_digit_counts(
     """Benford first-digit χ² gate per group from a pre-aggregated
     (group, d, obs) first-digit count table — the math core of
     queries.q188, factored out so the streaming twin
-    (ingest.benford_snapshot) sums its additive per-batch digit
+    (:func:`benford_spec`) sums its additive per-batch digit
     partials into the same count table and gets streaming == batch
     as an identity (the q170/q186/q194 twin pattern: one math core,
     two drivers).
@@ -1958,7 +1978,7 @@ def benford_summation_from_digit_masses(
     """Nigrini summation test per group from a pre-aggregated
     (group, d, m) first-digit MASS table — the math core of
     queries.q205, factored so the streaming twin
-    (ingest.benford_summation_snapshot) sums its additive per-batch
+    (:func:`benford_summation_spec`) sums its additive per-batch
     digit-mass partials into the same table and gets streaming ==
     batch as an identity (the q188 twin pattern, mass-weighted).
 
@@ -2213,7 +2233,7 @@ def nelson_aalen_hazard(
 def k_anonymity_rollup(cls: DataFrame, k: int = 5) -> DataFrame:
     """Per-nation k-anonymity audit from a pre-aggregated QI-class
     count table (nk, seg, band, sz) — the math core of queries.q196,
-    factored so the streaming twin (ingest.k_anonymity_snapshot)
+    factored so the streaming twin (:func:`k_anonymity_spec`)
     sums its additive per-batch class-count partials into the same
     table and gets streaming == batch as an identity (the
     q170/q186/q188/q194/q202 twin pattern). Pure integer
@@ -2230,3 +2250,346 @@ def k_anonymity_rollup(cls: DataFrame, k: int = 5) -> DataFrame:
         .cast("long")
         .alias("n_risky_rows"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Mergeable-partial specs (operators/mergeable.py): each batch query
+# below and its streaming twin (streaming/ingest.TWINS) call the same
+# partial and finalize.
+# ---------------------------------------------------------------------------
+
+
+def _cent_digit_cells(
+    rows: DataFrame, group: Column, amount_col: str, cell: Column
+) -> DataFrame:
+    """Per-(group, first digit d) cells of the cent-scaled amount: the
+    digit is the decimal-string head of floor(amount·100 + 0.5) (a
+    ×100 scale never changes the leading significant digit);
+    non-positive cents are dropped. ``cell`` aggregates the rows of a
+    cell over their cents ``vc``."""
+    v = rows.select(
+        group,
+        F.floor(F.col(amount_col) * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("vc"),
+    ).filter(F.col("vc") > 0)
+    return v.groupBy(
+        v.columns[0],
+        F.substring(F.col("vc").cast("string"), 1, 1)
+        .cast("int")
+        .alias("d"),
+    ).agg(cell)
+
+
+def benford_spec() -> Spec:
+    """q188's Benford gate per order priority. Partial: (pri, d, obs)
+    first-digit counts, ≤ 9 rows per priority; merge: sum."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return _cent_digit_cells(
+            rows.filter(F.col("o_totalprice").isNotNull()),
+            F.col("o_orderpriority").alias("pri"),
+            "o_totalprice",
+            F.count("*").cast("long").alias("obs"),
+        )
+
+    def finalize(obs: DataFrame) -> DataFrame:
+        return benford_gate_from_digit_counts(obs, "pri").select(
+            F.col("pri").alias("o_orderpriority"),
+            F.col("n_rows").alias("n_orders"),
+            "chi2_stat",
+            "benford_flag",
+        )
+
+    return Spec(partial, merge_by("pri", "d"), finalize)
+
+
+def benford_summation_spec() -> Spec:
+    """q205's Nigrini summation test per market segment. Rows carry
+    the customer segment as ``seg`` (the dimension join runs upstream
+    of the partial). Partial: (seg, d, m) first-digit cent masses;
+    merge: sum."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return _cent_digit_cells(
+            rows.filter(
+                F.col("o_totalprice").isNotNull() & F.col("seg").isNotNull()
+            ),
+            F.col("seg"),
+            "o_totalprice",
+            F.sum("vc").cast("long").alias("m"),
+        )
+
+    def finalize(obs: DataFrame) -> DataFrame:
+        return benford_summation_from_digit_masses(obs, "seg").select(
+            F.col("seg").alias("c_mktsegment"),
+            F.col("total_mass").alias("total_cents"),
+            "sum_stat",
+            "summation_flag",
+        )
+
+    return Spec(partial, merge_by("seg", "d"), finalize)
+
+
+def hll_spec(b: int = 6) -> Spec:
+    """q47's HLL distinct count of customers per order priority. The
+    partial stages two frames: ``regs`` (g, _reg, _M) register maxima,
+    max-merged, and ``vals`` (g, v) distinct pairs for the exact
+    anchor (countDistinct ignores repeats, so they merge by union).
+    Only value nulls drop; a null group is kept, as in the batch core.
+
+    GUARD: registers are staged at a fixed ``b``. Merging them at a
+    smaller ``b`` is detectable (a staged register index lands outside
+    [0, 2^b)) and refused — 2^b would mis-scale the estimate. A larger
+    ``b`` than staged is not detectable; keep b with the partials.
+
+    q47 itself stays on :func:`hll_deterministic` (countDistinct over
+    the raw rows), which shares the register core and the readout."""
+
+    def partial(rows: DataFrame) -> dict:
+        r = rows.filter(F.col("o_custkey").isNotNull()).select(
+            F.col("o_orderpriority").alias("g"),
+            F.col("o_custkey").alias("v"),
+        )
+        return {
+            "regs": hll_register_maxima(r, ["g"], "v", b),
+            "vals": r.distinct(),
+        }
+
+    def merge(staged: dict) -> dict:
+        regs = merge_by("g", "_reg", how="max")(staged["regs"])
+        if regs.filter(F.col("_reg") >= F.lit(1 << b)).limit(1).count():
+            raise ValueError(
+                f"hll: staged registers hold indices >= 2^{b} — the "
+                "partials were staged at a larger b than requested; "
+                "pass the stage-time b"
+            )
+        return {"regs": regs, "vals": staged["vals"]}
+
+    def finalize(m: dict) -> DataFrame:
+        out = _hll_readout(m["regs"], m["vals"], ["g"], "v", b)
+        return out.withColumnRenamed("g", "o_orderpriority")
+
+    return Spec(partial, merge, finalize, frames=("regs", "vals"))
+
+
+def kmv_spec(k: int = 64) -> Spec:
+    """q86's KMV/theta sketches of customers per order priority.
+    Partial: distinct (g, v) pairs (the pair set cannot shrink to a
+    sketch: n_exact and the theta sample need it); merge: set union.
+    q86 itself calls :func:`kmv_distinct` directly, which distincts
+    its input first."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return rows.select(
+            F.col("o_orderpriority").alias("g"), F.col("o_custkey").alias("v")
+        ).distinct()
+
+    def finalize(pairs: DataFrame) -> DataFrame:
+        return kmv_distinct(pairs, ["g"], "v", k=k).select(
+            F.col("g").alias("o_orderpriority"),
+            "n_sample",
+            "kmv_estimate",
+            "theta_estimate",
+            "n_exact",
+        )
+
+    return Spec(partial, distinct_merge, finalize)
+
+
+def cms_spec(
+    token_col: str = "tok", width: int = 16384, depth: int = 3
+) -> Spec:
+    """The count-min sketch that screens q116's heavy hitters.
+    Partial: :func:`cms_cells` (≤ depth·width rows whatever the
+    vocabulary); merge: sum; finalize: the cells themselves, which
+    :func:`cms_screen_verify` turns into exact heavy hitters."""
+
+    return Spec(
+        lambda rows: cms_cells(rows, token_col, width, depth),
+        merge_by("seed", "bucket"),
+        lambda cells: cells,
+    )
+
+
+def hhi_spec() -> Spec:
+    """q194's HHI / effective-source concentration per language.
+    Partial: (lang, source, mc) character mass; merge: sum. Squared
+    shares are not additive, so HHI is computed only in finalize, in
+    exact decimal(38,0)."""
+    from vnavc_spark.functions.portable import stable_round
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return rows.filter(
+            F.col("lang").isNotNull()
+            & F.col("source").isNotNull()
+            & F.col("n_chars").isNotNull()
+            & (F.col("n_chars") > 0)
+        ).groupBy("lang", "source").agg(
+            F.sum("n_chars").cast("long").alias("mc")
+        )
+
+    def finalize(m: DataFrame) -> DataFrame:
+        dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+        a = m.groupBy("lang").agg(
+            F.count("*").cast("long").alias("n_sources"),
+            F.sum(dec("mc") * dec("mc")).alias("sq"),
+            F.sum("mc").cast("long").alias("tot"),
+        )
+        dd = lambda c: F.col(c).cast("double")  # noqa: E731
+        return a.filter(F.col("tot") > 0).select(
+            "lang",
+            "n_sources",
+            stable_round(
+                dd("sq") * F.lit(10000.0) / (dd("tot") * dd("tot")), 6
+            ).alias("hhi"),
+            stable_round(dd("tot") * dd("tot") / dd("sq"), 6).alias(
+                "effective_sources"
+            ),
+        )
+
+    return Spec(partial, merge_by("lang", "source"), finalize)
+
+
+def k_anonymity_spec() -> Spec:
+    """q196's k<5 anonymity audit per nation. Partial: (nk, seg, band,
+    sz) quasi-identifier class sizes (nation, market segment,
+    account-balance kilo-band); merge: sum — a class split across
+    batches is judged on its corpus-wide size."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return rows.filter(
+            F.col("c_nationkey").isNotNull()
+            & F.col("c_mktsegment").isNotNull()
+            & F.col("c_acctbal").isNotNull()
+        ).groupBy(
+            F.col("c_nationkey").cast("long").alias("nk"),
+            F.col("c_mktsegment").alias("seg"),
+            F.floor(F.col("c_acctbal") / F.lit(1000.0))
+            .cast("long")
+            .alias("band"),
+        ).agg(F.count("*").cast("long").alias("sz"))
+
+    return Spec(
+        partial,
+        merge_by("nk", "seg", "band"),
+        lambda cls: k_anonymity_rollup(cls, k=5),
+    )
+
+
+def twa_events(rows: DataFrame) -> DataFrame:
+    """q182's row extraction: non-null (ts, value) events with the
+    value as exact cents ``vc``."""
+    return rows.filter(
+        F.col("ts").isNotNull() & F.col("value").isNotNull()
+    ).select(
+        "user_id",
+        "event_id",
+        "event_type",
+        "ts",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vc"),
+    )
+
+
+def twa_intervals(events: DataFrame) -> DataFrame:
+    """Each event's holding interval: ``nxt`` is the user's next event
+    time and ``dur`` its length in µs (null for the user's last event,
+    whose interval is still open)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.withColumn("nxt", F.lead("ts").over(w)).withColumn(
+        "dur",
+        F.unix_micros(F.col("nxt").cast("timestamp"))
+        - F.unix_micros(F.col("ts").cast("timestamp")),
+    )
+
+
+def twa_spec() -> Spec:
+    """q182's time-weighted average value per event type. The partial
+    takes :func:`twa_events` rows (the twin unions its carried
+    per-user last events in before the partial, so the extraction
+    stays outside) and aggregates the CLOSED intervals to
+    (event_type, n_intervals, num, den) exact cents×µs sums; merge:
+    sum; finalize: one terminal division chain."""
+    from vnavc_spark.functions.portable import stable_round
+
+    def partial(events: DataFrame) -> DataFrame:
+        dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+        return (
+            twa_intervals(events)
+            .filter(F.col("dur").isNotNull())
+            .groupBy("event_type")
+            .agg(
+                F.count("*").cast("long").alias("n_intervals"),
+                F.sum(dec("vc") * dec("dur")).alias("num"),
+                F.sum(dec("dur")).alias("den"),
+            )
+        )
+
+    def finalize(a: DataFrame) -> DataFrame:
+        return a.select(
+            "event_type",
+            "n_intervals",
+            stable_round(
+                F.col("num").cast("double")
+                / F.col("den").cast("double")
+                / F.lit(100.0),
+                6,
+            ).alias("twa_value"),
+        )
+
+    return Spec(partial, merge_by("event_type"), finalize)
+
+
+def session_survival_spec(gap_s: int = 1800, horizon_s: int = 1800) -> Spec:
+    """q223's Nelson–Aalen session-length hazard. Partial: per-user
+    session spans (user_id, f, l) in epoch seconds. Spans are
+    mergeable: sessionizing the union of batches equals merging the
+    per-batch spans with the gap rule (a span's endpoints are its
+    extreme events, so the smallest event gap between two spans is
+    their endpoint gap; overlapping spans merge at negative gap).
+    Finalize: durations in minutes, right-censored when a session
+    ends within ``horizon_s`` of the corpus end."""
+    from vnavc_spark.operators.intervals import session_intervals
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return session_intervals(
+            rows.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()),
+            gap_s=gap_s,
+        ).select(
+            "user_id",
+            F.unix_timestamp("s_start").alias("f"),
+            F.unix_timestamp("s_end").alias("l"),
+        )
+
+    def merge(spans: DataFrame) -> DataFrame:
+        # running-max end carried BEFORE each span, so overlapping
+        # replays and split sessions collapse as the event-level
+        # sessionizer would
+        w = Window.partitionBy("user_id").orderBy("f", "l")
+        prev_end = F.max("l").over(w.rowsBetween(Window.unboundedPreceding, -1))
+        new = F.when(
+            prev_end.isNull() | (F.col("f") - prev_end > gap_s), 1
+        ).otherwise(0)
+        gid = F.sum("_new").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        return (
+            spans.withColumn("_new", new)
+            .withColumn("_gid", gid)
+            .groupBy("user_id", "_gid")
+            .agg(F.min("f").alias("f"), F.max("l").alias("l"))
+        )
+
+    def finalize(spans: DataFrame) -> DataFrame:
+        m = spans.agg(F.max("l").alias("gm"))
+        per = spans.crossJoin(F.broadcast(m)).select(
+            F.floor((F.col("l") - F.col("f")) / F.lit(60.0))
+            .cast("long")
+            .alias("t"),
+            F.when(F.col("gm") - F.col("l") < horizon_s, 0)
+            .otherwise(1)
+            .alias("ev"),
+        )
+        return nelson_aalen_hazard(per, "t", "ev")
+
+    return Spec(partial, merge, finalize)

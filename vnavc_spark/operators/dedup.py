@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vnavc_spark.functions.quality import fingerprint, normalized_text, tokens
+from vnavc_spark.operators.mergeable import Spec, merge_by, union_merge
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -1641,85 +1642,6 @@ def ordered_shingle_sets(
     return ranked
 
 
-def set_similarity_join(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    bucket_cap: int | None = 2000,
-) -> DataFrame:
-    """EXACT Jaccard >= threshold self-join via prefix filtering —
-    recall 1.0 (unlike MinHash LSH), with all-pairs work avoided.
-
-    Lemma (All-Pairs): under any global element order, if
-    J(A, B) >= t then A and B share an element inside their prefixes
-    of length |X| - ceil(t * |X|) + 1. So the candidate join runs on
-    exploded *prefixes* only, plus the length filter
-    t * |A| <= |B| <= |A| / t.
-
-    Scale shape: the prefix holds the globally rarest shingles, so
-    the equi-join key is anti-hot by construction; `bucket_cap`
-    guards degenerate corpora (boilerplate shingles rare-but-shared
-    by thousands of docs). Verification is per-pair
-    size(array_intersect) over the two sorted sets — work linear in
-    candidate pairs, no shingle fan-out (the hot-shingle trap of a
-    corpus-wide `jaccard_pairs`).
-
-    Returns (id_a, id_b, n_inter, jaccard) for verified pairs.
-    """
-    sets = ordered_shingle_sets(df, id_col, text_col, n)
-    plen = F.greatest(
-        F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(threshold)) + 1,
-        F.lit(0),
-    ).cast("int")
-    pref = sets.select(
-        F.col(id_col),
-        F.col("n_sh"),
-        F.explode(F.slice("sets", 1, plen)).alias("ptok"),
-    )
-    pref = cap_bucket_size(pref, ["ptok"], bucket_cap)
-    a = pref.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"), "ptok"
-    )
-    b = pref.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"), "ptok"
-    )
-    cands = (
-        a.join(b, "ptok")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("n_b") * F.lit(threshold) <= F.col("n_a"))
-            & (F.col("n_a") * F.lit(threshold) <= F.col("n_b"))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sets.select(
-        F.col(id_col).alias("id_a"), F.col("sets").alias("_sa")
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"), F.col("sets").alias("_sb")
-    )
-    verified = (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("_sa", "_sb"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter")
-            / (
-                F.size("_sa") + F.size("_sb") - F.col("n_inter")
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_inter", "jaccard")
-    )
-    return verified
-
-
 def containment_join(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1899,9 +1821,9 @@ def containment_join(
 
 
 # ---------------------------------------------------------------------------
-# benchmark-contamination core (shared by queries.q179 and
-# streaming.ingest.start_contamination_screen — the q170 twin pattern:
-# one math core, two drivers)
+# benchmark-contamination core (shared by queries.q179 and its
+# streaming twin, contamination_spec — the q170 twin pattern: one
+# math core, two drivers)
 # ---------------------------------------------------------------------------
 
 
@@ -1970,9 +1892,9 @@ def contamination_screen(
 
 def contamination_rollup(per_doc: DataFrame) -> DataFrame:
     """Per-source rollup of per-doc contamination counts — the shared
-    output contract of queries.q179 (batch) and
-    streaming.ingest.contamination_snapshot (staged per-doc rows
-    summed per source). Partial-aggregatable; source-dimension-sized
+    output contract of queries.q179 (batch) and the finalize of
+    :func:`contamination_spec` (staged per-doc rows summed per
+    source). Partial-aggregatable; source-dimension-sized
     output."""
     return per_doc.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -2142,7 +2064,7 @@ def name_linkage_pairs(names: DataFrame, radius: int = 1) -> DataFrame:
     entity table: pairs within Levenshtein distance ``radius`` plus
     both sides' record counts — the math core of queries.q202
     (radius 1) and queries.q207 (radius 2), factored so the
-    streaming twin (ingest.name_linkage_snapshot) sums its additive
+    streaming twin (:func:`name_linkage_spec`) sums its additive
     per-batch name counts into the same entity table and gets
     streaming == batch as an identity.
 
@@ -2292,8 +2214,8 @@ def name_linkage_pairs(names: DataFrame, radius: int = 1) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: The ONE Fellegi-Sunter model config for the customer-entity
-#: pipeline — queries.q208, queries.q209, and the streaming twin
-#: (ingest.fellegi_sunter_snapshot) all consume these same objects,
+#: pipeline — queries.q208, queries.q209, and the streaming twins
+#: (fellegi_sunter_spec and its siblings) all consume these objects,
 #: so retuning the model cannot leave a consumer on stale weights.
 #: Fixed integer log2(m/u)-shaped priors (see fellegi_sunter_scores).
 FS_ATTR_WEIGHTS: dict[str, tuple[int, int]] = {
@@ -2798,3 +2720,117 @@ def entity_rekey(
         )
         .drop("__rekey_nm")
     )
+
+
+# ---------------------------------------------------------------------------
+# Mergeable-partial specs (operators/mergeable.py): each batch query
+# below and its streaming twin (streaming/ingest.TWINS) call the same
+# partial and finalize.
+# ---------------------------------------------------------------------------
+
+
+def contamination_spec(
+    bench_hashes: DataFrame | None = None, n: int = 13
+) -> Spec:
+    """q179's per-source benchmark contamination. The partial screens
+    each doc's distinct ``n``-token shingles against ``bench_hashes``
+    (a FROZEN benchmark: the eval suite is fixed before training data
+    flows) to one (doc_id, source, n_shingles, n_hits) row per doc.
+    Docs arrive whole within one batch, so staged rows merge by union;
+    finalize is :func:`contamination_rollup`. Only the partial needs
+    ``bench_hashes``. q179 screens its persisted shingle table with
+    the same :func:`contamination_screen` and rolls up with the same
+    finalize."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        return contamination_screen(
+            token_shingle_hashes(rows, "text", n=n), bench_hashes
+        )
+
+    return Spec(partial, union_merge, contamination_rollup)
+
+
+def _name_counts(rows: DataFrame) -> DataFrame:
+    """(nm, n_recs): records per distinct customer name."""
+    return rows.filter(F.col("c_name").isNotNull()).groupBy(
+        F.col("c_name").alias("nm")
+    ).agg(F.count("*").cast("long").alias("n_recs"))
+
+
+def name_linkage_spec(radius: int = 1) -> Spec:
+    """q202 (radius 1) and q207 (radius 2, rolled up per distance):
+    linkage pairs of customer names. Partial: (nm, n_recs) name
+    counts — radius-agnostic, so both depths read one staging; merge:
+    sum (copies of a name in different batches collapse to one entity
+    with its corpus-wide count); finalize: :func:`name_linkage_pairs`,
+    which refuses a radius outside {1, 2}."""
+    return Spec(
+        _name_counts,
+        merge_by("nm"),
+        lambda names: name_linkage_pairs(names, radius=radius),
+    )
+
+
+def customer_entity_rows(rows: DataFrame) -> DataFrame:
+    """The customer entity table the Fellegi-Sunter family scores
+    over: one row per distinct name with its record count and
+    min-merged attributes (nm, n_recs, nation, segment, bal_band).
+    Every field is mergeable: counts add, and a min of per-batch mins
+    is the corpus min (min ignores nulls, so an attribute null in one
+    batch and present in another merges to the present value, as the
+    batch groupBy does)."""
+    return rows.filter(F.col("c_name").isNotNull()).groupBy(
+        F.col("c_name").alias("nm")
+    ).agg(
+        F.count("*").cast("long").alias("n_recs"),
+        F.min("c_nationkey").alias("nation"),
+        F.min("c_mktsegment").alias("segment"),
+        F.min(F.floor(F.col("c_acctbal") / F.lit(1000.0))).alias("bal_band"),
+    )
+
+
+def _fs_scored(ent: DataFrame) -> DataFrame:
+    pairs = name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
+    return fellegi_sunter_customer_scores(pairs, ent)
+
+
+def _entity_spec(finalize) -> Spec:
+    return Spec(
+        customer_entity_rows, merge_by("nm", how="min", n_recs="sum"), finalize
+    )
+
+
+def fellegi_sunter_spec() -> Spec:
+    """q208's Fellegi-Sunter (decision, dist) rollup over the customer
+    entity table (:func:`customer_entity_rows`)."""
+    return _entity_spec(lambda ent: fellegi_sunter_rollup(_fs_scored(ent)))
+
+
+def agreement_patterns_spec() -> Spec:
+    """q210's agreement-pattern histogram, from the same entity
+    partials as :func:`fellegi_sunter_spec`."""
+    return _entity_spec(lambda ent: fs_agreement_patterns(_fs_scored(ent)))
+
+
+def entity_clusters_spec() -> Spec:
+    """q209's entity clusters (nm, entity_id, n_recs), from the same
+    entity partials as :func:`fellegi_sunter_spec`."""
+
+    def finalize(ent: DataFrame) -> DataFrame:
+        matches = _fs_scored(ent).filter(F.col("decision") == "match").select(
+            F.col("name_a").alias("doc_a"), F.col("name_b").alias("doc_b")
+        )
+        # cut lineage before CC: dedup_clusters unions the edge table
+        # with its flip (two evaluations of the plan) and the match-pair
+        # table carries the whole blocking+scoring pipeline —
+        # checkpointing pays it once (decision-filtered pairs are tiny)
+        matches = matches.localCheckpoint()
+        clusters = dedup_clusters(matches).select(
+            F.col("doc_id").alias("nm"),
+            F.col("cluster_id").alias("entity_id"),
+        )
+        return clusters.join(ent.select("nm", "n_recs"), "nm").select(
+            "nm", "entity_id", "n_recs"
+        )
+
+    return _entity_spec(finalize)

@@ -236,49 +236,3 @@ def apply_changes(
     return kept.unionByName(upserts)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Changelog GENERATION — the inverse of ``apply_changes``: diff
-    two snapshots of a keyed table into I/U/D change rows (the CDC
-    emit side of a lakehouse table format, cf. Delta CDF /
-    Iceberg changelog scan).
-
-    Emits one row per changed key: op 'I' (key only in ``new``),
-    'D' (key only in ``old``), 'U' (present in both with any value
-    column differing under null-safe equality); unchanged keys emit
-    nothing. Output carries both images: ``<c>_old`` / ``<c>_new``.
-
-    Scale shape: a single full-outer sort-merge join on the key —
-    the only correct join type here (broadcast impossible for
-    full-outer) — with all comparison logic as codegen'd column
-    expressions. No window, no driver state; scales to any snapshot
-    size Spark can shuffle.
-    """
-    o = old.select(
-        F.col(key),
-        F.lit(True).alias("_in_old"),
-        *[F.col(c).alias(f"{c}_old") for c in value_cols],
-    )
-    nn = new.select(
-        F.col(key),
-        F.lit(True).alias("_in_new"),
-        *[F.col(c).alias(f"{c}_new") for c in value_cols],
-    )
-    j = o.join(nn, on=key, how="full_outer")
-    changed = F.lit(False)
-    for c in value_cols:
-        changed = changed | ~F.col(f"{c}_old").eqNullSafe(F.col(f"{c}_new"))
-    op = (
-        F.when(F.col("_in_old").isNull(), "I")
-        .when(F.col("_in_new").isNull(), "D")
-        .when(changed, "U")
-    )
-    return (
-        j.withColumn("op", op)
-        .filter(F.col("op").isNotNull())
-        .drop("_in_old", "_in_new")
-    )

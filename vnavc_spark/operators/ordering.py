@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vnavc_spark.functions.text import trailing_int
+from vnavc_spark.operators.mergeable import Spec, merge_by
 
 
 def with_natural_part_order(df: DataFrame, path_col: str = "path") -> DataFrame:
@@ -230,49 +231,6 @@ def sliding_chunks(
         F.col("start_tok").cast("long").alias("start_tok"),
         F.size(chunk).cast("long").alias("n_tok"),
         F.array_join(chunk, " ").alias("chunk_text"),
-    )
-
-
-def gap_fill_locf(
-    df: DataFrame,
-    key_col: str,
-    idx_col: str,
-    value_col: str,
-    lo: int,
-    hi: int,
-) -> DataFrame:
-    """Time-series gap fill over a dense integer grid with
-    last-observation-carried-forward.
-
-    For every key present in ``df``, materializes the full grid
-    ``lo..hi`` of ``idx_col``, left-joins the observations, and fills
-    missing values with the latest preceding observation (NULL before
-    the first one). Adds ``filled`` and a ``was_gap`` flag.
-
-    Scale shape: the grid is generated map-side from the (small)
-    distinct-key set via sequence+explode — no driver loop, no
-    cross join of materialized ranges. The left join and the LOCF
-    window both hash/partition on the key, so AQE can reuse one
-    exchange; per-key state is the window frame only (streaming-safe
-    frame: unbounded preceding → current row on a sorted run).
-    """
-    keys = df.select(key_col).distinct()
-    grid = keys.select(
-        F.col(key_col),
-        F.explode(F.sequence(F.lit(lo), F.lit(hi))).alias(idx_col),
-    )
-    obs = df.select(key_col, idx_col, value_col)
-    j = grid.join(obs, on=[key_col, idx_col], how="left")
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(idx_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return j.select(
-        F.col(key_col),
-        F.col(idx_col),
-        F.col(value_col).isNull().alias("was_gap"),
-        F.last(value_col, ignorenulls=True).over(w).alias("filled"),
     )
 
 
@@ -635,9 +593,9 @@ def ks_drift_from_counts(sv: DataFrame, group_col: str = "source",
     """Exact two-sample Kolmogorov–Smirnov statistic of each group's
     value distribution against the pooled corpus, from a
     pre-aggregated (group, value, cnt) count table — the shared core
-    of queries.q170 (batch) and streaming.ingest.ks_drift_snapshot
-    (additive batch partials summed to the same count table, so
-    streaming == batch by construction).
+    of queries.q170 (batch) and its streaming twin, both through
+    :func:`ks_drift_spec` (additive batch partials summed to the
+    same count table, so streaming == batch by construction).
 
     See q170's docstring for the math; the input contract is that
     ``cnt`` is an exact long count per DISTINCT (group, value) pair
@@ -698,10 +656,10 @@ def score_separation_from_counts(
     cnt_pos) count table — the classifier-evaluation triple (ROC AUC,
     Gini = 2·AUC − 1, and the KS statistic credit-scoring reports as
     "maximum separation") computed with ZERO per-group buffering and
-    no global sort. Shared by queries.q186 (batch) and
-    streaming.ingest.score_separation_snapshot (additive batch
-    partials summed to the same count table, so streaming == batch by
-    construction).
+    no global sort. Shared by queries.q186 (batch) and its
+    streaming twin, both through :func:`score_separation_spec`
+    (additive batch partials summed to the same count table, so
+    streaming == batch by construction).
 
     Math: with midranks, AUC = U/(n1·n0) where U = R1 − n1(n1+1)/2
     and 2·R1 = Σ_v c1(v)·(2·C(<v) + c(v) + 1) needs only per-value
@@ -878,10 +836,10 @@ def quantile_drift_from_counts(
 ) -> DataFrame:
     """Per-group decile table vs the pooled-corpus deciles, from a
     pre-aggregated (group, value, cnt) count table — the inverse-CDF
-    lookup core shared by queries.q192 (batch) and
-    streaming.ingest.quantile_drift_snapshot (the SAME additive
-    length-histogram partials the KS twin stages reproduce this count
-    table exactly, so streaming == batch by construction).
+    lookup core shared by queries.q192 (batch) and its streaming
+    twin, both through :func:`quantile_drift_spec` (the SAME
+    additive length-histogram partials the KS twin stages reproduce
+    this count table exactly, so streaming == batch by construction).
 
     The q-th decile is min{v : cum(v) ≥ ⌈q·n/10⌉}; the ceiling is
     (q·n + 9) div 10 in exact longs — the whole computation is
@@ -948,4 +906,135 @@ def quantile_drift_from_counts(
         "src_value",
         "corpus_value",
         (F.col("src_value") - F.col("corpus_value")).alias("drift"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Mergeable-partial specs (operators/mergeable.py): each batch query
+# below and its streaming twin (streaming/ingest.TWINS) call the same
+# partial and finalize.
+# ---------------------------------------------------------------------------
+
+
+def window_topk_spec(k: int = 3) -> Spec:
+    """q156's top-k event types per tumbling hour. Partial: (wstart,
+    event_type, n) counts; merge: sum (a late row lands in its
+    event-time window through whatever batch it arrives in). The rank
+    filter stays on the raw row_number so WindowGroupLimit keeps each
+    hour's sort to a k-element heap."""
+
+    def partial(rows: DataFrame) -> DataFrame:
+        e = rows.filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
+        return e.groupBy(
+            F.date_trunc("hour", "ts").alias("wstart"), "event_type"
+        ).agg(F.count("*").cast("long").alias("n"))
+
+    def finalize(h: DataFrame) -> DataFrame:
+        rk = F.row_number().over(
+            Window.partitionBy("wstart").orderBy(
+                F.col("n").desc(), F.col("event_type").asc()
+            )
+        )
+        return (
+            h.withColumn("rk", rk)
+            .filter(F.col("rk") <= k)
+            .select(
+                F.date_format("wstart", "yyyy-MM-dd HH:mm:ss").alias(
+                    "window_start"
+                ),
+                "event_type",
+                F.col("n").alias("n_events"),
+                F.col("rk").cast("long").alias("rk"),
+            )
+        )
+
+    return Spec(partial, merge_by("wstart", "event_type"), finalize)
+
+
+def _length_counts(rows: DataFrame) -> DataFrame:
+    """(source, n_chars, cnt) document-length histogram, nulls dropped —
+    the one corpus-sized pass of q170 and q192."""
+    return rows.filter(
+        F.col("source").isNotNull() & F.col("n_chars").isNotNull()
+    ).groupBy("source", "n_chars").agg(F.count("*").cast("long").alias("cnt"))
+
+
+def ks_drift_spec() -> Spec:
+    """q170's per-source KS drift. Partial: the length histogram;
+    merge: sum."""
+    return Spec(
+        _length_counts, merge_by("source", "n_chars"), ks_drift_from_counts
+    )
+
+
+def quantile_drift_spec() -> Spec:
+    """q192's per-source decile drift, from the same staged length
+    histogram as :func:`ks_drift_spec`."""
+
+    def finalize(sv: DataFrame) -> DataFrame:
+        return quantile_drift_from_counts(
+            sv.select("source", F.col("n_chars").cast("long").alias("v"), "cnt"),
+            "source",
+            "v",
+        )
+
+    return Spec(_length_counts, merge_by("source", "n_chars"), finalize)
+
+
+def label_counts(
+    rows: DataFrame, group_col: str, value: str | Column, pos: Column
+) -> DataFrame:
+    """Class-conditional histogram (group, value, cnt, cnt_pos): ``pos``
+    is the row's 0/1 positive-label indicator and ``value`` a column
+    name or an aliased Column. The count table that
+    :func:`score_separation_from_counts` and
+    :func:`average_precision_from_counts` consume; q186, q203, q204
+    and q217 each build theirs with it."""
+    return rows.groupBy(group_col, value).agg(
+        F.count("*").cast("long").alias("cnt"),
+        F.sum(pos).cast("long").alias("cnt_pos"),
+    )
+
+
+def _label_histogram_spec(core, group, value, label, pos) -> Spec:
+    def partial(rows: DataFrame) -> DataFrame:
+        return label_counts(
+            rows.filter(F.col(group).isNotNull() & F.col(value).isNotNull()),
+            group,
+            F.col(value).cast("long").alias(value),
+            F.when(F.col(label) == F.lit(pos), 1).otherwise(F.lit(0)),
+        )
+
+    return Spec(
+        partial, merge_by(group, value), lambda sv: core(sv, group, value)
+    )
+
+
+def score_separation_spec(
+    group: str = "source",
+    value: str = "n_chars",
+    label: str = "lang",
+    pos: str = "en",
+) -> Spec:
+    """AUC/Gini/KS separation of ``value`` against ``label == pos`` per
+    ``group``: q186 with the defaults. Partial: the class-conditional
+    histogram (:func:`label_counts`); merge: sum. The events shapes of
+    q203 (group=event_type, value=cents) and q204 (a composite
+    group) stage the same histogram from their own projections."""
+    return _label_histogram_spec(
+        score_separation_from_counts, group, value, label, pos
+    )
+
+
+def average_precision_spec(
+    group: str = "source",
+    value: str = "n_chars",
+    label: str = "lang",
+    pos: str = "en",
+) -> Spec:
+    """Average precision of ``value`` against ``label == pos`` per
+    ``group``, from the same staged histogram as
+    :func:`score_separation_spec` (q217 in the events shape)."""
+    return _label_histogram_spec(
+        average_precision_from_counts, group, value, label, pos
     )

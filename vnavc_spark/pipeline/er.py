@@ -47,22 +47,13 @@ class ERResult(NamedTuple):
 
 def customer_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The customer entity table the Fellegi-Sunter family scores
-    over: one row per distinct name with the record count and
-    min-merged representative attributes (the same merge the
-    streaming twin's partials reproduce). Single authority — q208,
-    q209, q210, q211 and this pipeline all route through it so they
-    cannot drift onto different entity definitions."""
+    over: the entity specs' partial (``dedup.customer_entity_rows``)
+    over the whole customer table. Single authority — q208, q209,
+    q210, q211 and this pipeline all route through it so they cannot
+    drift onto different entity definitions."""
     from vnavc_spark.io import table
 
-    c = table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
-    return c.groupBy(F.col("c_name").alias("nm")).agg(
-        F.count("*").cast("long").alias("n_recs"),
-        F.min("c_nationkey").alias("nation"),
-        F.min("c_mktsegment").alias("segment"),
-        F.min(F.floor(F.col("c_acctbal") / F.lit(1000.0))).alias(
-            "bal_band"
-        ),
-    )
+    return dedup.customer_entity_rows(table(spark, sf_dir, "customer"))
 
 
 def resolve_entities(

@@ -8198,29 +8198,9 @@ def q156_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays on the raw row_number so WindowGroupLimit keeps each
     hour's sort to a 3-element heap; null types/timestamps dropped
     explicitly on both engines."""
-    e = table(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-    )
-    h = e.groupBy(
-        F.date_trunc("hour", "ts").alias("wstart"), "event_type"
-    ).agg(F.count("*").cast("long").alias("n"))
-    rk = F.row_number().over(
-        Window.partitionBy("wstart").orderBy(
-            F.col("n").desc(), F.col("event_type").asc()
-        )
-    )
-    return (
-        h.withColumn("rk", rk)
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.date_format("wstart", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            F.col("n").alias("n_events"),
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
+    from vnavc_spark.operators.ordering import window_topk_spec
+
+    return window_topk_spec(k=3).batch(table(spark, sf_dir, "events"))
 
 
 @query(
@@ -9074,19 +9054,11 @@ def q170_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset QA is pandas ``describe()`` over duration/word-count
     columns (pre_processing/process_all.py:770-844); this is that
     health check, distribution-shaped and exact at scale."""
-    from vnavc_spark.operators.ordering import ks_drift_from_counts
+    from vnavc_spark.operators.ordering import ks_drift_spec
 
-    d = table(spark, sf_dir, "documents").filter(
-        F.col("source").isNotNull() & F.col("n_chars").isNotNull()
-    )
     # the per-(source, value) count table is the ONLY corpus-sized
     # pass; everything after runs on the value-domain aggregate
-    # (shared with the streaming twin — ks_drift_snapshot sums the
-    # same counts from additive batch partials)
-    sv = d.groupBy("source", "n_chars").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    return ks_drift_from_counts(sv)
+    return ks_drift_spec().batch(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -10041,9 +10013,9 @@ def q179_contamination_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle/screen/rollup core is shared with the streaming twin
     (operators/dedup.token_shingle_hashes / contamination_screen /
-    contamination_rollup; streaming.ingest.start_contamination_screen
-    stages per-doc counts per batch against a FROZEN benchmark set —
-    the q170 one-core-two-drivers pattern, parity-tested)."""
+    contamination_rollup; ``dedup.contamination_spec`` stages per-doc
+    counts per batch against a FROZEN benchmark set — the q170
+    one-core-two-drivers pattern, parity-tested)."""
     from vnavc_spark.cache import tracked_persist
 
     d = table(spark, sf_dir, "documents")
@@ -10244,43 +10216,8 @@ def q182_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the long overflow a 1000×-user corpus would hit); HUGEINT
     mirrors it in the oracle; ONE terminal double division chain
     (num / den / 100), 1e-6-rounded — q170's decimal pattern."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    iv = (
-        e.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("vc"),
-        )
-        .withColumn("nxt", F.lead("ts").over(w))
-        .withColumn(
-            "dur",
-            F.unix_micros(F.col("nxt").cast("timestamp"))
-            - F.unix_micros(F.col("ts").cast("timestamp")),
-        )
-        .filter(F.col("dur").isNotNull())
-    )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    a = iv.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_intervals"),
-        F.sum(dec("vc") * dec("dur")).alias("num"),
-        F.sum(dec("dur")).alias("den"),
-    )
-    return a.select(
-        "event_type",
-        "n_intervals",
-        stable_round(
-            F.col("num").cast("double")
-            / F.col("den").cast("double")
-            / F.lit(100.0),
-            6,
-        ).alias("twa_value"),
-    )
+    e = aggregates.twa_events(table(spark, sf_dir, "events"))
+    return aggregates.twa_spec().batch(e)
 
 
 @query(
@@ -10723,26 +10660,15 @@ def q186_score_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(<v), and both statistics fall out as exact decimal(38,0)
     integers with one terminal IEEE division each (the oracle's
     per-group rank windows are what dies at 100 TB). Shared core
-    ``ordering.score_separation_from_counts`` — the streaming twin
-    (ingest.score_separation_snapshot) sums additive per-batch
-    histogram partials into the same count table, so streaming ==
-    batch by construction (parity-tested)."""
-    from vnavc_spark.operators.ordering import score_separation_from_counts
+    ``ordering.score_separation_from_counts``, run as
+    ``ordering.score_separation_spec`` — the streaming twin sums the
+    spec's additive per-batch histogram partials into the same count
+    table, so streaming == batch by construction (parity-tested)."""
+    from vnavc_spark.operators.ordering import score_separation_spec
 
-    d = table(spark, sf_dir, "documents").filter(
-        F.col("source").isNotNull() & F.col("n_chars").isNotNull()
-    )
     # the ONLY corpus-sized pass: everything downstream runs on the
     # (source × distinct-length) count table
-    sv = d.groupBy("source", F.col("n_chars").cast("long").alias("n_chars")).agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum(
-            F.when(F.col("lang") == F.lit("en"), 1).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("cnt_pos"),
-    )
-    return score_separation_from_counts(sv, "source", "n_chars")
+    return score_separation_spec().batch(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -10958,35 +10884,11 @@ def q188_benford_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale never changes the leading significant digit). One map-side
     count pass over the facts; everything downstream is
     9 × |priorities| rows — since round 10 factored into
-    ``aggregates.benford_gate_from_digit_counts`` so the streaming
-    twin (ingest.start_digit_partials / benford_snapshot) sums its
-    additive per-batch digit partials into the same core and
+    ``aggregates.benford_gate_from_digit_counts``; the query is
+    ``aggregates.benford_spec``, whose streaming twin sums its
+    additive per-batch digit partials into the same core, so
     snapshot == batch is an identity (parity-tested)."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    v = o.select(
-        F.col("o_orderpriority").alias("pri"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("vc"),
-    ).filter(F.col("vc") > 0)
-    obs = v.groupBy(
-        "pri",
-        F.substring(F.col("vc").cast("string"), 1, 1)
-        .cast("int")
-        .alias("d"),
-    ).agg(F.count("*").cast("long").alias("obs"))
-    from vnavc_spark.operators.aggregates import (
-        benford_gate_from_digit_counts,
-    )
-
-    return benford_gate_from_digit_counts(obs, "pri").select(
-        F.col("pri").alias("o_orderpriority"),
-        F.col("n_rows").alias("n_orders"),
-        "chi2_stat",
-        "benford_flag",
-    )
+    return aggregates.benford_spec().batch(table(spark, sf_dir, "orders"))
 
 
 @query(
@@ -11197,16 +11099,10 @@ def q192_quantile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup is one filtered min per (source, decile). Cost:
     value-domain × sources, never the corpus. The streaming side
     needs NOTHING new: the same additive length histograms staged for
-    the KS twin (start_length_histograms) reproduce sv exactly."""
-    from vnavc_spark.operators.ordering import quantile_drift_from_counts
+    the KS twin (ordering.ks_drift_spec) reproduce sv exactly."""
+    from vnavc_spark.operators.ordering import quantile_drift_spec
 
-    d = table(spark, sf_dir, "documents").filter(
-        F.col("source").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    sv = d.groupBy(
-        "source", F.col("n_chars").cast("long").alias("v")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    return quantile_drift_from_counts(sv, "source", "v")
+    return quantile_drift_spec().batch(table(spark, sf_dir, "documents"))
 
 
 def _daily_event_cents(
@@ -11376,32 +11272,7 @@ def q194_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     One map-side aggregate to (lang × source) cells, then a
     cells-sized reduction — nothing corpus-sized past the first
     pass."""
-    d = table(spark, sf_dir, "documents").filter(
-        F.col("lang").isNotNull()
-        & F.col("source").isNotNull()
-        & F.col("n_chars").isNotNull()
-        & (F.col("n_chars") > 0)
-    )
-    m = d.groupBy("lang", "source").agg(
-        F.sum("n_chars").cast("long").alias("mc")
-    )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    a = m.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_sources"),
-        F.sum(dec("mc") * dec("mc")).alias("sq"),
-        F.sum("mc").cast("long").alias("tot"),
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    return a.filter(F.col("tot") > 0).select(
-        "lang",
-        "n_sources",
-        stable_round(
-            dd("sq") * F.lit(10000.0) / (dd("tot") * dd("tot")), 6
-        ).alias("hhi"),
-        stable_round(dd("tot") * dd("tot") / dd("sq"), 6).alias(
-            "effective_sources"
-        ),
-    )
+    return aggregates.hhi_spec().batch(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -11490,21 +11361,7 @@ def q196_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     classes-sized reduction; trivially hash-stable, and the QI-class
     table is the generalization candidate set if the audit fails
     (widen bands → re-run)."""
-    c = table(spark, sf_dir, "customer").filter(
-        F.col("c_nationkey").isNotNull()
-        & F.col("c_mktsegment").isNotNull()
-        & F.col("c_acctbal").isNotNull()
-    )
-    cls = c.groupBy(
-        F.col("c_nationkey").cast("long").alias("nk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.floor(F.col("c_acctbal") / F.lit(1000.0))
-        .cast("long")
-        .alias("band"),
-    ).agg(F.count("*").cast("long").alias("sz"))
-    from vnavc_spark.operators.aggregates import k_anonymity_rollup
-
-    return k_anonymity_rollup(cls, k=5)
+    return aggregates.k_anonymity_spec().batch(table(spark, sf_dir, "customer"))
 
 
 @query(
@@ -12046,11 +11903,7 @@ def q202_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     name domain where byte and codepoint distances coincide; the
     unicode half of the evidence is the codepoint brute-force pin
     in test_operators_unit (accented/CJK names, both radii)."""
-    c = table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
-    names = c.groupBy(F.col("c_name").alias("nm")).agg(
-        F.count("*").cast("long").alias("n_recs")
-    )
-    return dedup.name_linkage_pairs(names)
+    return dedup.name_linkage_spec().batch(table(spark, sf_dir, "customer"))
 
 
 @query(
@@ -12114,8 +11967,21 @@ def q203_weekend_value_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     core — the same core the streaming label-histogram twin sums its
     additive partials into, so the events-shaped snapshot is
     parity-tested against THIS query (second consumer)."""
-    from vnavc_spark.operators.ordering import score_separation_from_counts
+    from vnavc_spark.operators.ordering import (
+        label_counts,
+        score_separation_from_counts,
+    )
 
+    sv = label_counts(
+        _weekend_cents(spark, sf_dir), "event_type", "cents", F.col("p")
+    )
+    return score_separation_from_counts(sv, "event_type", "cents")
+
+
+def _weekend_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q203/q217's row extraction: non-null events as (event_type,
+    cents, p) with the value in exact cents and p = 1 on a weekend
+    (q153's epoch-day weekday arithmetic)."""
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull()
         & F.col("value").isNotNull()
@@ -12125,17 +11991,13 @@ def q203_weekend_value_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     )
     wk = ((epoch + 3) % 7 + 1).isin(6, 7)
-    sv = e.select(
+    return e.select(
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5))
         .cast("long")
         .alias("cents"),
         F.when(wk, 1).otherwise(0).alias("p"),
-    ).groupBy("event_type", "cents").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum("p").cast("long").alias("cnt_pos"),
     )
-    return score_separation_from_counts(sv, "event_type", "cents")
 
 
 @query(
@@ -12199,7 +12061,10 @@ def q204_daily_night_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|types|·|days| groups: the group count grows with the CALENDAR,
     not the row count, so at 100 TB this is a small-output daily
     rollup whose one shuffle is the (group, cents) count pass."""
-    from vnavc_spark.operators.ordering import score_separation_from_counts
+    from vnavc_spark.operators.ordering import (
+        label_counts,
+        score_separation_from_counts,
+    )
 
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull()
@@ -12213,23 +12078,18 @@ def q204_daily_night_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle groups by the REAL columns, so a separator that can
     # occur inside event_type would silently split the composite key
     # differently in the two engines
-    sv = (
-        e.select(
-            F.concat_ws(
-                "\x1f", F.col("event_type"), epoch.cast("string")
-            ).alias("g"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-            F.when(F.hour("ts") < 6, 1).otherwise(0).alias("p"),
-        )
-        .groupBy("g", "cents")
-        .agg(
-            F.count("*").cast("long").alias("cnt"),
-            F.sum("p").cast("long").alias("cnt_pos"),
-        )
+    rows = e.select(
+        F.concat_ws(
+            "\x1f", F.col("event_type"), epoch.cast("string")
+        ).alias("g"),
+        F.floor(F.col("value") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("cents"),
+        F.when(F.hour("ts") < 6, 1).otherwise(0).alias("p"),
     )
-    r = score_separation_from_counts(sv, "g", "cents")
+    r = score_separation_from_counts(
+        label_counts(rows, "g", "cents", F.col("p")), "g", "cents"
+    )
     return r.select(
         F.substring_index("g", "\x1f", 1).alias("event_type"),
         F.substring_index("g", "\x1f", -1).cast("long").alias("epoch_day"),
@@ -12302,42 +12162,16 @@ def q205_benford_summation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the summation statistic is not χ²-calibrated. One broadcast
     customer join + one map-side mass pass; everything downstream is
     9 × |segments| rows, computed in the shared
-    ``aggregates.benford_summation_from_digit_masses`` core so the
-    streaming twin (ingest.start_digit_mass_partials /
-    benford_summation_snapshot) sums its additive per-batch digit
-    masses into the same table — snapshot == batch is an identity."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
+    ``aggregates.benford_summation_from_digit_masses`` core; the
+    query is ``aggregates.benford_summation_spec``, whose streaming
+    twin sums its additive per-batch digit masses into the same
+    table — snapshot == batch is an identity."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    rows = o.join(c, o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("seg"), "o_totalprice"
     )
-    c = table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isNotNull()
-    )
-    v = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("vc"),
-        )
-        .filter(F.col("vc") > 0)
-    )
-    obs = v.groupBy(
-        "seg",
-        F.substring(F.col("vc").cast("string"), 1, 1)
-        .cast("int")
-        .alias("d"),
-    ).agg(F.sum("vc").cast("long").alias("m"))
-    from vnavc_spark.operators.aggregates import (
-        benford_summation_from_digit_masses,
-    )
-
-    return benford_summation_from_digit_masses(obs, "seg").select(
-        F.col("seg").alias("c_mktsegment"),
-        F.col("total_mass").alias("total_cents"),
-        "sum_stat",
-        "summation_flag",
-    )
+    return aggregates.benford_summation_spec().batch(rows)
 
 
 @query(
@@ -12476,11 +12310,9 @@ def q207_radius2_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein caveat: the oracle certifies on the ASCII name
     domain; unicode correctness is pinned codepoint-exact in
     test_operators_unit)."""
-    c = table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
-    names = c.groupBy(F.col("c_name").alias("nm")).agg(
-        F.count("*").cast("long").alias("n_recs")
+    pairs = dedup.name_linkage_spec(radius=2).batch(
+        table(spark, sf_dir, "customer")
     )
-    pairs = dedup.name_linkage_pairs(names, radius=2)
     return (
         pairs.groupBy("dist")
         .agg(
@@ -12553,10 +12385,9 @@ def q208_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (names² + the same arithmetic at oracle scale) so neither a
     blocking recall bug nor a scoring bug can hide (the q202 stance,
     incl. its ASCII-domain levenshtein caveat)."""
-    ent = _customer_fs_entities(spark, sf_dir)
-    pairs = dedup.name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    scored = dedup.fellegi_sunter_customer_scores(pairs, ent)
-    return dedup.fellegi_sunter_rollup(scored)
+    return dedup.fellegi_sunter_spec().finalize(
+        _customer_fs_entities(spark, sf_dir)
+    )
 
 
 def _customer_fs_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12622,23 +12453,8 @@ def q209_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE is brute-force names² scoring + a recursive transitive-
     closure CTE, so a blocking, scoring, OR clustering bug all break
     the hash (the q202/q56 stances composed)."""
-    ent = _customer_fs_entities(spark, sf_dir)
-    pairs = dedup.name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    scored = dedup.fellegi_sunter_customer_scores(pairs, ent)
-    matches = scored.filter(F.col("decision") == "match").select(
-        F.col("name_a").alias("doc_a"), F.col("name_b").alias("doc_b")
-    )
-    # cut lineage before CC: dedup_clusters unions the edge table
-    # with its flip (two evaluations of the plan) and the match-pair
-    # table here carries the whole blocking+scoring pipeline —
-    # checkpointing pays it once (decision-filtered pairs are tiny)
-    matches = matches.localCheckpoint()
-    clusters = dedup.dedup_clusters(matches).select(
-        F.col("doc_id").alias("nm"),
-        F.col("cluster_id").alias("entity_id"),
-    )
-    return clusters.join(ent.select("nm", "n_recs"), "nm").select(
-        "nm", "entity_id", "n_recs"
+    return dedup.entity_clusters_spec().finalize(
+        _customer_fs_entities(spark, sf_dir)
     )
 
 
@@ -12683,15 +12499,8 @@ def q210_agreement_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on those 16 rows — the corpus never participates in
     the fit. Brute-force names²+arithmetic oracle (the q202
     stance)."""
-    ent = _customer_fs_entities(spark, sf_dir)
-    pairs = dedup.name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    scored = dedup.fellegi_sunter_customer_scores(pairs, ent)
-    return dedup.fs_agreement_patterns(scored).select(
-        "dist",
-        "agree_nation",
-        "agree_segment",
-        F.col("agree_bal_band"),
-        "n_pairs",
+    return dedup.agreement_patterns_spec().finalize(
+        _customer_fs_entities(spark, sf_dir)
     )
 
 
@@ -13320,26 +13129,11 @@ def q217_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     first aggregation."""
     from vnavc_spark.operators.ordering import (
         average_precision_from_counts,
+        label_counts,
     )
 
-    e = table(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-    )
-    epoch = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    )
-    wk = ((epoch + 3) % 7 + 1).isin(6, 7)
-    sv = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        F.when(wk, 1).otherwise(0).alias("p"),
-    ).groupBy("event_type", "cents").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum("p").cast("long").alias("cnt_pos"),
+    sv = label_counts(
+        _weekend_cents(spark, sf_dir), "event_type", "cents", F.col("p")
     )
     return average_precision_from_counts(sv, "event_type", "cents")
 
@@ -13971,30 +13765,15 @@ def q223_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over it; spans reduce per (user, session); the hazard
     tail is two ordered_cumsum passes over the minute-bounded
     duration grid (saturating — constant as events grow)."""
-    from vnavc_spark.operators.aggregates import nelson_aalen_hazard
-    from vnavc_spark.operators.intervals import session_intervals
-
-    e = table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    g = session_intervals(e).select(
-        F.unix_timestamp("s_start").alias("f"),
-        F.unix_timestamp("s_end").alias("l"),
-    )
-    # persist the session spans (session-sized): the corpus-end max
-    # here plus the hazard core's total and grid aggregates otherwise
-    # re-run the sessionize shuffle + windows three times (r13)
     from vnavc_spark.cache import tracked_persist
 
-    g = tracked_persist(g, "q223_sessions")
-    m = g.agg(F.max("l").alias("gm"))
-    per = g.crossJoin(F.broadcast(m)).select(
-        F.floor((F.col("l") - F.col("f")) / F.lit(60.0))
-        .cast("long")
-        .alias("t"),
-        F.when(F.col("gm") - F.col("l") < 1800, 0).otherwise(1).alias("ev"),
-    )
-    return nelson_aalen_hazard(per, "t", "ev")
+    spec = aggregates.session_survival_spec()
+    # persist the session spans (session-sized): the corpus-end max
+    # in finalize plus the hazard core's total and grid aggregates
+    # otherwise re-run the sessionize shuffle + windows three times
+    # (r13). Spans of one batch are already merged, so no merge runs.
+    g = spec.partial(table(spark, sf_dir, "events")).select("f", "l")
+    return spec.finalize(tracked_persist(g, "q223_sessions"))
 
 
 # ---------------------------------------------------------------------------

@@ -10,9 +10,28 @@ analog is queries.q32).
 State posture at scale: ``dropDuplicates`` keeps one state row per
 key within the watermark horizon — the horizon bounds state size;
 checkpointing makes ingest exactly-once into the Parquet sink.
+
+Streaming twins. Each twinned statistic is one mergeable-partial
+spec (``operators/mergeable.Spec``), defined beside its shared core
+in ``aggregates``, ``ordering`` or ``dedup``; :data:`TWINS` lists
+them. The stream side of every twin is :func:`start_partials` (each
+micro-batch stages ``spec.partial`` of its own rows under
+``batch_id=N``) and the read side is :func:`snapshot`
+(``finalize(merge(staged))``), which equals the batch query
+``finalize(partial(table))``. Exceptions, each named:
+
+- hll stages two frames, ``regs`` and ``vals`` (``spec.frames``);
+- twa keeps its own starter, :func:`start_twa_partials`, for its
+  carried per-user state; its per-batch closed-interval aggregate and
+  its finalize come from q182's spec (``aggregates.twa_spec``);
+- contamination's spec closes over the benchmark hashes
+  (``dedup.contamination_spec(bench_hashes)``).
 """
 
 from __future__ import annotations
+
+import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +44,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from vnavc_spark.operators import aggregates, dedup, ordering
+from vnavc_spark.operators.mergeable import Spec
 
 #: incoming event-record schema (file stream needs it declared)
 EVENT_STREAM_SCHEMA = StructType(
@@ -256,32 +278,21 @@ def interval_join(
     )
 
 
-def start_streaming_cms(
-    stream: DataFrame,
-    cells_path: str,
-    checkpoint: str,
-    token_col: str = "tok",
-    width: int = 16384,
-    depth: int = 3,
-):
-    """Maintain a count-min sketch over a token stream with CONSTANT
-    state: each micro-batch writes its own partial (seed, bucket,
-    est) cells under ``cells_path/batch_id=N`` — at most depth·width
-    rows per batch, vs the vocabulary-sized state a streaming
-    groupBy(token) would carry. Sketches are ADDITIVE, so the
-    cumulative sketch is a sum over batch partitions
-    (:func:`cms_cells_snapshot`).
-
-    Exactly-once: the partial for a batch id is overwritten in place
-    on re-delivery (same data → same cells), so replays after a
-    checkpoint recovery never double-count.
-    """
-    from vnavc_spark.operators.aggregates import cms_cells
+def start_partials(
+    stream: DataFrame, path: str, checkpoint: str, spec: Spec
+) -> StreamingQuery:
+    """Stream side of every twin: each micro-batch writes
+    ``spec.partial`` of ITS OWN rows under ``path/batch_id=N`` (one
+    subdirectory per name in ``spec.frames``). No streaming aggregation
+    state is kept. A replayed batch id overwrites its own partial in
+    place, so checkpoint recovery never double-counts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_cells(batch_df, token_col, width, depth).write.mode(
-            "overwrite"
-        ).parquet(f"{cells_path}/batch_id={batch_id}")
+        staged = spec.partial(batch_df)
+        for name, df in (staged.items() if spec.frames else [("", staged)]):
+            df.write.mode("overwrite").parquet(
+                os.path.join(path, name, f"batch_id={batch_id}")
+            )
 
     return (
         stream.writeStream.foreachBatch(_batch)
@@ -291,90 +302,16 @@ def start_streaming_cms(
     )
 
 
-def start_windowed_type_counts(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-):
-    """Stream side of the per-window top-k (queries.q156's streaming
-    twin): each micro-batch aggregates ITS OWN rows to (hour-window,
-    type, n) partial counts and stages them under
-    ``partials_path/batch_id=N`` — counts are ADDITIVE, so the
-    cumulative table is a sum over batch partials and the pipeline
-    needs NO streaming aggregation state at all (the q156-shape
-    top-k ranking can't run inside a streaming agg anyway — window
-    functions aren't supported on streaming DataFrames). Late rows
-    simply land in their event-time window via whatever batch they
-    arrive in; a batch id's partial is overwritten in place on
-    replay, so checkpoint recovery never double-counts (the
-    streaming-CMS exactly-once stance)."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col(type_col).isNotNull() & F.col(ts_col).isNotNull()
-            )
-            .groupBy(
-                F.date_trunc("hour", ts_col).alias("wstart"),
-                F.col(type_col).alias("event_type"),
-            )
-            .agg(F.count("*").cast("long").alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_topk_snapshot(spark, partials_path: str, k: int = 3) -> DataFrame:
-    """Top-k event types per hour window from the staged partials —
-    identical output contract to queries.q156 (window_start string,
-    event_type, n_events, rk). The partial sum is a map-side
-    combinable aggregate over (windows × types × batches) rows; the
-    rank window partitions on the corpus-cardinality window key."""
-    from pyspark.sql import Window
-
-    agg = (
-        spark.read.parquet(partials_path)
-        .groupBy("wstart", "event_type")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-    rk = F.row_number().over(
-        Window.partitionBy("wstart").orderBy(
-            F.col("n").desc(), F.col("event_type").asc()
-        )
-    )
-    return (
-        agg.withColumn("rk", rk)
-        .filter(F.col("rk") <= k)
-        .select(
-            F.date_format("wstart", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            F.col("n").alias("n_events"),
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
-
-
-def cms_cells_snapshot(spark, cells_path: str) -> DataFrame:
-    """Cumulative sketch = per-(seed, bucket) sum over all staged
-    batch partials. Input is ≤ n_batches · depth · width rows —
-    compact at any horizon; re-aggregate into a single partition dir
-    if batch count ever matters."""
-    return (
-        spark.read.parquet(cells_path)
-        .groupBy("seed", "bucket")
-        .agg(F.sum("est").alias("est"))
-    )
+def snapshot(spark: SparkSession, path: str, spec: Spec) -> DataFrame:
+    """Read side of every twin: ``finalize(merge(staged partials))`` —
+    the batch query's exact output over every batch staged so far."""
+    if spec.frames:
+        staged = {
+            n: spark.read.parquet(os.path.join(path, n)) for n in spec.frames
+        }
+    else:
+        staged = spark.read.parquet(path)
+    return spec.finalize(spec.merge(staged))
 
 
 def streaming_heavy_hitters(
@@ -387,758 +324,22 @@ def streaming_heavy_hitters(
     depth: int = 3,
 ) -> DataFrame:
     """EXACT heavy hitters over a streamed corpus, amortized: the
-    expensive sketch pass already ran incrementally
-    (:func:`start_streaming_cms`); this snapshot query screens the
-    staged corpus with the CUMULATIVE cells and exact-counts only the
-    candidates — the lambda-architecture shape where the on-demand
-    batch query is cheap because the stream did the heavy counting.
-    Same guarantee as ``cms_heavy_hitters``: estimates only
-    over-count, so no true heavy hitter is screened out and the
-    final integer filter is exact."""
-    from vnavc_spark.operators.aggregates import cms_screen_verify
-
-    return cms_screen_verify(
+    expensive sketch pass already ran incrementally (``cms-cells``
+    staged through :func:`start_partials`); this snapshot query
+    screens the staged corpus with the CUMULATIVE cells and
+    exact-counts only the candidates — the lambda-architecture shape
+    where the on-demand batch query is cheap because the stream did
+    the heavy counting. Same guarantee as ``cms_heavy_hitters``:
+    estimates only over-count, so no true heavy hitter is screened
+    out and the final integer filter is exact."""
+    return aggregates.cms_screen_verify(
         corpus_df,
-        cms_cells_snapshot(spark, cells_path),
+        snapshot(spark, cells_path, aggregates.cms_spec(token_col, width, depth)),
         token_col,
         k,
         width,
         depth,
     )
-
-
-def start_length_histograms(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    source_col: str = "source",
-    len_col: str = "n_chars",
-):
-    """Stream side of the KS-drift monitor (queries.q170's streaming
-    twin): each micro-batch aggregates ITS OWN rows to (source,
-    length, cnt) histogram partials under
-    ``partials_path/batch_id=N``. Counts are ADDITIVE, so the
-    cumulative per-(source, value) table is a plain sum over batch
-    partials — no streaming aggregation state, and a replayed batch
-    id overwrites its own partial in place (the windowed-type-counts
-    exactly-once stance). The KS statistic itself is NOT computed
-    per batch — it is a corpus-level sup over the cumulative ECDFs,
-    recomputed on demand from the staged histograms by
-    :func:`ks_drift_snapshot` at value-domain cost."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col(source_col).isNotNull() & F.col(len_col).isNotNull()
-            )
-            .groupBy(source_col, len_col)
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ks_drift_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-source KS drift from the staged histogram partials —
-    identical output contract to queries.q170 (source, n_docs,
-    ks_stat). Summing the additive partials reproduces the batch
-    count table EXACTLY, and the shared
-    ``ordering.ks_drift_from_counts`` core does the rest, so
-    streaming == batch is an identity, not an approximation
-    (parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.ordering import ks_drift_from_counts
-
-    sv = (
-        spark.read.parquet(partials_path)
-        .groupBy("source", "n_chars")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return ks_drift_from_counts(sv)
-
-
-def quantile_drift_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-source decile drift table from the SAME staged length
-    histograms the KS twin writes (:func:`start_length_histograms`) —
-    identical output contract to queries.q192 (source, decile,
-    src_value, corpus_value, drift). One staged partial set feeds
-    both distribution monitors: summing the additive counts
-    reproduces the batch count table exactly, and the shared
-    ``ordering.quantile_drift_from_counts`` core does the rest
-    (streaming == batch identity, parity-tested)."""
-    from vnavc_spark.operators.ordering import quantile_drift_from_counts
-
-    sv = (
-        spark.read.parquet(partials_path)
-        .groupBy("source", F.col("n_chars").alias("v"))
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return quantile_drift_from_counts(sv, "source", "v")
-
-
-def start_label_histograms(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    source_col: str = "source",
-    len_col: str = "n_chars",
-    label_col: str = "lang",
-    pos_value: str = "en",
-):
-    """Stream side of the score-separation monitor (queries.q186's
-    streaming twin): each micro-batch aggregates ITS OWN rows to
-    (source, value, cnt, cnt_pos) class-conditional histogram
-    partials under ``partials_path/batch_id=N`` — the
-    :func:`start_length_histograms` shape with the positive-label
-    mass riding along. Both counts are ADDITIVE, so the cumulative
-    count table is a plain sum over batch partials (no streaming
-    aggregation state; a replayed batch id overwrites its own partial
-    in place). AUC/Gini/KS are NOT computed per batch — they are
-    corpus-level rank statistics, recomputed on demand from the
-    staged histograms by :func:`score_separation_snapshot` at
-    value-domain cost."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col(source_col).isNotNull() & F.col(len_col).isNotNull()
-            )
-            .groupBy(source_col, len_col)
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum(
-                    F.when(
-                        F.col(label_col) == F.lit(pos_value), 1
-                    ).otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias("cnt_pos"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def score_separation_snapshot(
-    spark,
-    partials_path: str,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-) -> DataFrame:
-    """Per-group AUC/Gini/KS score separation from the staged
-    class-conditional histogram partials — identical output contract
-    to queries.q186 (source, n_pos, n_neg, auc, gini, ks_stat) in
-    the default shape, or any (group, value) pair the partials were
-    staged under (round 10: the events shape — group=event_type,
-    value=cents — is parity-pinned against queries.q203, the core's
-    second consumer). Summing the additive partials reproduces the
-    batch count table EXACTLY, and the shared
-    ``ordering.score_separation_from_counts`` core does the rest, so
-    streaming == batch is an identity, not an approximation
-    (parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.ordering import score_separation_from_counts
-
-    sv = (
-        spark.read.parquet(partials_path)
-        .groupBy(group_col, value_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            F.sum("cnt_pos").cast("long").alias("cnt_pos"),
-        )
-    )
-    return score_separation_from_counts(sv, group_col, value_col)
-
-
-def average_precision_snapshot(
-    spark,
-    partials_path: str,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-) -> DataFrame:
-    """Per-group exact AVERAGE PRECISION (step-convention PR-AUC)
-    from the SAME staged class-conditional histogram partials the
-    score-separation twin maintains (:func:`start_label_histograms`
-    — no new staging contract): summing the additive partials
-    reproduces the batch (group, value, cnt, cnt_pos) count table
-    exactly, and the shared
-    ``ordering.average_precision_from_counts`` core does the rest,
-    so streaming == batch is an identity, not an approximation.
-    Identical output contract to queries.q217 in the events shape
-    (group=event_type, value=cents): (group, n_pos, n_neg, ap,
-    prevalence)."""
-    from vnavc_spark.operators.ordering import (
-        average_precision_from_counts,
-    )
-
-    sv = (
-        spark.read.parquet(partials_path)
-        .groupBy(group_col, value_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            F.sum("cnt_pos").cast("long").alias("cnt_pos"),
-        )
-    )
-    return average_precision_from_counts(sv, group_col, value_col)
-
-
-def start_session_span_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    gap_s: int = 1800,
-):
-    """Stream side of the session-survival monitor (queries.q223's
-    twin): each micro-batch sessionizes ITS OWN events
-    (:func:`vnavc_spark.operators.intervals.session_intervals`) and
-    stages the per-batch PARTIAL session spans (user_id, f_sec,
-    l_sec) under ``partials_path/batch_id=N``. Partial spans are
-    MERGEABLE state: sessionize(union of batches) ≡ gap-rule
-    interval merge of the per-batch spans — a span's endpoints are
-    its extreme events, so the minimal event gap between two partial
-    sessions IS their endpoint gap, and merging spans whose gap ≤
-    ``gap_s`` reconstructs the event-level chain exactly (the Spark
-    session-window merge identity; overlapping spans from a session
-    seen in two batches merge at negative gap). A replayed batch id
-    overwrites its own partial in place."""
-    from vnavc_spark.operators.intervals import session_intervals
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            session_intervals(
-                batch_df.filter(
-                    F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-                ),
-                gap_s=gap_s,
-            )
-            .select(
-                "user_id",
-                F.unix_timestamp("s_start").alias("f_sec"),
-                F.unix_timestamp("s_end").alias("l_sec"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def session_survival_snapshot(
-    spark,
-    partials_path: str,
-    gap_s: int = 1800,
-    horizon_s: int = 1800,
-) -> DataFrame:
-    """Nelson–Aalen session-length hazard from the staged partial
-    session spans — identical output contract to queries.q223.
-    Spans are merged per user with the gap rule (running-max end
-    carried BEFORE each span, so overlapping replays and split
-    sessions collapse exactly as the event-level sessionizer would
-    — see :func:`start_session_span_partials`), then durations,
-    the ``horizon_s`` right-censor against the corpus end, and the
-    shared ``aggregates.nelson_aalen_hazard`` core. Streaming ==
-    batch is the session-window merge identity, not an
-    approximation (parity-tested in tests/test_streaming.py)."""
-    from pyspark.sql import Window
-
-    from vnavc_spark.operators.aggregates import nelson_aalen_hazard
-
-    spans = spark.read.parquet(partials_path)
-    w = Window.partitionBy("user_id").orderBy("f_sec", "l_sec")
-    prev_end = F.max("l_sec").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    merged = (
-        spans.withColumn(
-            "_new",
-            F.when(
-                prev_end.isNull()
-                | (F.col("f_sec") - prev_end > gap_s),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn(
-            "_gid",
-            F.sum("_new").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("user_id", "_gid")
-        .agg(F.min("f_sec").alias("f"), F.max("l_sec").alias("l"))
-    )
-    m = merged.agg(F.max("l").alias("gm"))
-    per = merged.crossJoin(F.broadcast(m)).select(
-        F.floor((F.col("l") - F.col("f")) / F.lit(60.0))
-        .cast("long")
-        .alias("t"),
-        F.when(F.col("gm") - F.col("l") < horizon_s, 0)
-        .otherwise(1)
-        .alias("ev"),
-    )
-    return nelson_aalen_hazard(per, "t", "ev")
-
-
-def start_digit_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    group_col: str = "o_orderpriority",
-    amount_col: str = "o_totalprice",
-):
-    """Stream side of the Benford forensic gate (queries.q188's
-    streaming twin, the round-9 shelf item): each micro-batch
-    aggregates ITS OWN rows to (group, first-digit, obs) count
-    partials under ``partials_path/batch_id=N``. The digit is the
-    decimal-string head of the cent-scaled BIGINT — q188's exact
-    extraction, computed per batch. Counts are ADDITIVE integers
-    (the cheapest twin state possible: ≤ 9 rows per group per
-    batch); a replayed batch id overwrites its own partial in place,
-    so the stage is replay-idempotent. The χ² and flag are NOT
-    computed per batch — they are corpus-level statistics recomputed
-    on demand by :func:`benford_snapshot` at 9 × |groups| cost."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(F.col(amount_col).isNotNull())
-            .select(
-                F.col(group_col).alias("pri"),
-                F.floor(F.col(amount_col) * 100 + F.lit(0.5))
-                .cast("long")
-                .alias("vc"),
-            )
-            .filter(F.col("vc") > 0)
-            .groupBy(
-                "pri",
-                F.substring(F.col("vc").cast("string"), 1, 1)
-                .cast("int")
-                .alias("d"),
-            )
-            .agg(F.count("*").cast("long").alias("obs"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def benford_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-priority Benford χ² gate from the staged first-digit count
-    partials — identical output contract to queries.q188
-    (o_orderpriority, n_orders, chi2_stat, benford_flag). Summing the
-    additive partials reproduces the batch digit-count table EXACTLY,
-    and the shared ``aggregates.benford_gate_from_digit_counts`` core
-    does the rest — streaming == batch is an identity, not an
-    approximation (parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.aggregates import (
-        benford_gate_from_digit_counts,
-    )
-
-    obs = (
-        spark.read.parquet(partials_path)
-        .groupBy("pri", "d")
-        .agg(F.sum("obs").cast("long").alias("obs"))
-    )
-    return benford_gate_from_digit_counts(obs, "pri").select(
-        F.col("pri").alias("o_orderpriority"),
-        F.col("n_rows").alias("n_orders"),
-        "chi2_stat",
-        "benford_flag",
-    )
-
-
-def start_hll_register_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    group_col: str = "o_orderpriority",
-    value_col: str = "o_custkey",
-    b: int = 6,
-):
-    """Stream side of the distinct-count sketch monitor
-    (queries.q47's streaming twin): each micro-batch reduces ITS OWN
-    rows to (group, _reg, _M) HLL register maxima under
-    ``partials_path/regs/batch_id=N`` — 2^b ints per group per batch,
-    the smallest possible distinct-count state. Register max is
-    associative/commutative, so per-batch maxima MAX-MERGE to the
-    corpus registers exactly (the mergeable-sketch identity —
-    the 100 TB answer to distinct counting over a stream); a
-    replayed batch id overwrites its own partial in place. Because
-    q47's batch contract also carries the exact countDistinct anchor
-    (the error audit), the stage ALSO writes the batch's DISTINCT
-    (group, value) pairs under ``partials_path/vals/batch_id=N`` —
-    that union-merged state is what ANY exact distinct count must
-    hold; production monitoring drops it and keeps only the
-    registers. The estimate is NOT computed per batch — harmonic
-    accumulation only means anything on the merged registers,
-    recomputed on demand by :func:`hll_snapshot`."""
-    from vnavc_spark.operators.aggregates import hll_register_maxima
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        # only VALUE nulls drop — the batch core keeps a NULL group
-        # key (groupBy retains nulls), so the twin must too or the
-        # snapshot diverges from q47 on a null-group corpus
-        rows = batch_df.filter(F.col(value_col).isNotNull()).select(
-            F.col(group_col).alias("g"), F.col(value_col).alias("v")
-        )
-        hll_register_maxima(rows, ["g"], "v", b).write.mode(
-            "overwrite"
-        ).parquet(f"{partials_path}/regs/batch_id={batch_id}")
-        rows.distinct().write.mode("overwrite").parquet(
-            f"{partials_path}/vals/batch_id={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def hll_snapshot(spark, partials_path: str, b: int = 6) -> DataFrame:
-    """Per-group HLL distinct-count sketch from the staged register
-    partials — identical output contract to queries.q47
-    (o_orderpriority, n_registers_hit, harmonic_sum, hll_estimate,
-    n_exact). Max-merging the per-batch register maxima reproduces
-    the batch register table EXACTLY (max is order- and
-    batching-insensitive), the shared
-    ``aggregates.hll_estimate_from_registers`` core turns it into
-    the estimate, and the exact anchor is countDistinct over the
-    union-merged staged pairs — streaming == batch is an identity,
-    not an approximation (parity-tested in tests/test_streaming.py).
-
-    GUARD: registers are staged at a FIXED precision (the stage-time
-    ``b``); reading them back at a smaller ``b`` is detectable (a
-    staged register index lands outside [0, 2^b)) and REFUSED —
-    2^b would silently mis-scale the harmonic estimate. The reverse
-    mismatch (snapshot b larger than stage b) is NOT detectable from
-    the indices alone; keep b with the partials path."""
-    from vnavc_spark.operators.aggregates import (
-        hll_estimate_from_registers,
-    )
-
-    regs = (
-        spark.read.parquet(f"{partials_path}/regs")
-        .groupBy("g", "_reg")
-        .agg(F.max("_M").alias("_M"))
-    )
-    bad = regs.filter(F.col("_reg") >= F.lit(1 << b)).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"hll_snapshot: staged registers at {partials_path} hold "
-            f"indices >= 2^{b} — the partials were staged at a larger "
-            "b than requested; pass the stage-time b"
-        )
-    ex = (
-        spark.read.parquet(f"{partials_path}/vals")
-        .groupBy("g")
-        .agg(F.countDistinct("v").cast("long").alias("n_exact"))
-    )
-    return (
-        hll_estimate_from_registers(regs, ["g"], b)
-        .join(ex, on="g")
-        .select(
-            F.col("g").alias("o_orderpriority"),
-            "n_registers_hit",
-            "harmonic_sum",
-            "hll_estimate",
-            "n_exact",
-        )
-    )
-
-
-def start_kmv_value_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    group_col: str = "o_orderpriority",
-    value_col: str = "o_custkey",
-):
-    """Stream side of the KMV/theta sketch monitor (queries.q86's
-    streaming twin): each micro-batch writes ITS OWN DISTINCT
-    (group, value) pairs under ``partials_path/batch_id=N`` — the
-    staged-signature pattern kmv_distinct's own docstring prescribes
-    at 100 TB ("swap the exact distinct for the staged-signature
-    pattern if values repeat heavily across partitions"). Unlike the
-    HLL twin, the pair state can't shrink to registers: q86's
-    contract carries n_exact and the theta sample over DISTINCT
-    values, and both need the pair set. Distinct-pair staging is
-    idempotent twice over: a replayed batch id overwrites its own
-    partial, and re-delivered values union away at snapshot time.
-    The estimates are NOT computed per batch — k-smallest and the
-    theta count only mean anything on the corpus-wide distinct set,
-    recomputed on demand by :func:`kmv_snapshot`."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no null gate: the batch core's distinct KEEPS null values,
-        # so the twin must stage them too (strict snapshot parity)
-        (
-            batch_df.select(
-                F.col(group_col).alias("g"),
-                F.col(value_col).alias("v"),
-            )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def kmv_snapshot(spark, partials_path: str, k: int = 64) -> DataFrame:
-    """Per-group KMV + theta sketches from the staged distinct-pair
-    partials — identical output contract to queries.q86
-    (o_orderpriority, n_sample, kmv_estimate, theta_estimate,
-    n_exact). The union of per-batch distinct pairs re-distincts to
-    the corpus pair set EXACTLY (set union is order- and
-    batching-insensitive), and the UNEDITED
-    ``aggregates.kmv_distinct`` core does the rest — streaming ==
-    batch is an identity, not an approximation (parity-tested in
-    tests/test_streaming.py)."""
-    from vnavc_spark.operators.aggregates import kmv_distinct
-
-    pairs = spark.read.parquet(partials_path).select("g", "v").distinct()
-    return kmv_distinct(pairs, ["g"], "v", k=k).select(
-        F.col("g").alias("o_orderpriority"),
-        "n_sample",
-        "kmv_estimate",
-        "theta_estimate",
-        "n_exact",
-    )
-
-
-def start_digit_mass_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    group_col: str = "seg",
-    amount_col: str = "o_totalprice",
-):
-    """Stream side of the Nigrini summation monitor (queries.q205's
-    streaming twin): each micro-batch aggregates ITS OWN rows to
-    (group, first-digit, cent-mass) partials under
-    ``partials_path/batch_id=N`` — q205's exact digit extraction
-    with Σ(cents) instead of count(*) as the cell value. Masses are
-    ADDITIVE integers (≤ 9 rows per group per batch); a replayed
-    batch id overwrites its own partial in place. The summation
-    statistic is NOT computed per batch — a few large amounts landing
-    in one batch say nothing until weighed against the corpus-wide
-    digit masses, recomputed on demand by
-    :func:`benford_summation_snapshot` at 9 × |groups| cost. The
-    stream carries the group column pre-joined (q205's
-    customer-segment join happens upstream of the stage — dim joins
-    don't belong in the additive partial)."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col(amount_col).isNotNull()
-                & F.col(group_col).isNotNull()
-            )
-            .select(
-                F.col(group_col).alias("seg"),
-                F.floor(F.col(amount_col) * 100 + F.lit(0.5))
-                .cast("long")
-                .alias("vc"),
-            )
-            .filter(F.col("vc") > 0)
-            .groupBy(
-                "seg",
-                F.substring(F.col("vc").cast("string"), 1, 1)
-                .cast("int")
-                .alias("d"),
-            )
-            .agg(F.sum("vc").cast("long").alias("m"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def benford_summation_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-segment Nigrini summation test from the staged digit-mass
-    partials — identical output contract to queries.q205
-    (c_mktsegment, total_cents, sum_stat, summation_flag). Summing
-    the additive partials reproduces the batch digit-mass table
-    EXACTLY, and the shared
-    ``aggregates.benford_summation_from_digit_masses`` core does the
-    rest — streaming == batch is an identity, not an approximation
-    (parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.aggregates import (
-        benford_summation_from_digit_masses,
-    )
-
-    obs = (
-        spark.read.parquet(partials_path)
-        .groupBy("seg", "d")
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
-    return benford_summation_from_digit_masses(obs, "seg").select(
-        F.col("seg").alias("c_mktsegment"),
-        F.col("total_mass").alias("total_cents"),
-        "sum_stat",
-        "summation_flag",
-    )
-
-
-def start_mass_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    group_col: str = "lang",
-    cell_col: str = "source",
-    mass_col: str = "n_chars",
-):
-    """Stream side of the concentration monitor (queries.q194's
-    streaming twin): each micro-batch aggregates ITS OWN rows to
-    (group, cell, mass) partials under ``partials_path/batch_id=N``.
-    Mass sums are ADDITIVE, so the cumulative (group, cell) mass
-    table is a plain sum over batch partials; a replayed batch id
-    overwrites its own partial in place (the established exactly-once
-    stance). HHI itself is NOT computed per batch — squared shares
-    are not additive; the snapshot recomputes them from the staged
-    cells at (group × cell) cost."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col(group_col).isNotNull()
-                & F.col(cell_col).isNotNull()
-                & F.col(mass_col).isNotNull()
-                & (F.col(mass_col) > 0)
-            )
-            .groupBy(group_col, cell_col)
-            .agg(F.sum(mass_col).cast("long").alias("mass"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def hhi_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-language HHI / effective-source concentration from the
-    staged mass partials — identical output contract to queries.q194
-    (lang, n_sources, hhi, effective_sources). Summing the additive
-    partials reproduces the batch (lang × source) mass table EXACTLY,
-    and the same exact-decimal squared-mass reduction does the rest
-    (streaming == batch identity, parity-tested)."""
-    from vnavc_spark.functions.portable import stable_round
-
-    m = (
-        spark.read.parquet(partials_path)
-        .groupBy("lang", "source")
-        .agg(F.sum("mass").cast("long").alias("mc"))
-    )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    a = m.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_sources"),
-        F.sum(dec("mc") * dec("mc")).alias("sq"),
-        F.sum("mc").cast("long").alias("tot"),
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    return a.filter(F.col("tot") > 0).select(
-        "lang",
-        "n_sources",
-        stable_round(
-            dd("sq") * F.lit(10000.0) / (dd("tot") * dd("tot")), 6
-        ).alias("hhi"),
-        stable_round(dd("tot") * dd("tot") / dd("sq"), 6).alias(
-            "effective_sources"
-        ),
-    )
-
-
-def start_contamination_screen(
-    stream: DataFrame,
-    bench_hashes: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    n: int = 13,
-) -> StreamingQuery:
-    """Stream side of the benchmark-contamination monitor
-    (queries.q179's streaming twin): decontamination runs against a
-    FROZEN benchmark — the eval suite is fixed before training data
-    flows — so each micro-batch screens ITS OWN docs against the
-    static benchmark shingle set and stages per-doc counts
-    (doc_id, source, n_shingles, n_hits) under
-    ``partials_path/batch_id=N``. A replayed batch id overwrites its
-    own partial in place (the staged-partials exactly-once stance);
-    per-batch cost ∝ batch shingles; staged state is ONE ROW PER DOC.
-    The shingle/screen math is the shared
-    ``operators/dedup.token_shingle_hashes`` /
-    ``contamination_screen`` core, so streaming == batch is an
-    identity over the same doc set (parity-tested)."""
-    from vnavc_spark.operators.dedup import (
-        contamination_screen,
-        token_shingle_hashes,
-    )
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        per = contamination_screen(
-            token_shingle_hashes(batch_df, "text", n=n), bench_hashes
-        )
-        per.write.mode("overwrite").parquet(
-            f"{partials_path}/batch_id={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def contamination_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-source contamination rollup from the staged per-doc
-    partials — identical output contract to queries.q179 (source,
-    n_docs, n_contaminated, hit_shingles, total_shingles). Docs
-    arrive whole within one micro-batch, so the staged per-doc rows
-    ARE the batch per-doc table and the shared
-    ``contamination_rollup`` does the rest — streaming == batch by
-    construction."""
-    from vnavc_spark.operators.dedup import contamination_rollup
-
-    return contamination_rollup(spark.read.parquet(partials_path))
 
 
 def start_twa_partials(
@@ -1147,81 +348,39 @@ def start_twa_partials(
     state_path: str,
     checkpoint: str,
 ) -> StreamingQuery:
-    """Stream side of the time-weighted-average monitor
-    (queries.q182's streaming twin): each value HOLDS until the
-    user's next event, and an interval completes only when that next
-    event ARRIVES — so the state is exactly ONE row per user (the
-    last event seen) and each micro-batch closes the intervals whose
-    right endpoint it contains. Per batch: union the carried
-    last-event rows with the batch's events, per-user lead window
-    (batch-local — never a corpus window), aggregate the CLOSED
-    intervals to (event_type, n_intervals, num, den) integer/decimal
-    partials under ``partials_path/batch_id=N``, and write the new
-    per-user last-event state under ``state_path/batch_id=N``.
+    """Stream side of the time-weighted-average twin (q182): each
+    value HOLDS until the user's next event, and an interval closes
+    only when that next event ARRIVES — so the carried state is ONE
+    row per user (the last event seen). Per batch: union the state
+    batch N−1 wrote with the batch's ``twa_events`` rows, stage
+    ``twa_spec().partial`` (the closed intervals) under
+    ``partials_path/batch_id=N``, and write each user's last event
+    under ``state_path/batch_id=N``.
 
     Replay idempotence: batch N reads the state batch N−1 WROTE
     (never mutable shared state), so a replayed batch recomputes its
-    own partial and state from the same inputs — both writes
-    overwrite in place. Input contract: batches partition the event
-    stream in per-user time order (the natural arrival order — an
-    interval's two endpoints may land in different batches, but
-    never out of order), nulls dropped as in the batch query.
-    Snapshot == batch is then an identity: every consecutive pair is
-    closed exactly once, products are exact cents×µs integers, and
-    the partial sums are additive (parity-tested)."""
+    own partial and state from the same inputs. A missing batch N−1
+    state raises (the read fails before anything is written), since
+    the carried open intervals would otherwise be dropped. Input
+    contract: batches partition the event stream in per-user time
+    order (an interval's two endpoints may land in different
+    batches, but never out of order)."""
+    spec = aggregates.twa_spec()
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        e = batch_df.filter(
-            F.col("ts").isNotNull() & F.col("value").isNotNull()
-        ).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("vc"),
-        )
+        e = aggregates.twa_events(batch_df)
         if batch_id > 0:
-            try:
-                prev = spark.read.parquet(
+            e = e.unionByName(
+                batch_df.sparkSession.read.parquet(
                     f"{state_path}/batch_id={batch_id - 1}"
                 )
-                e = e.unionByName(prev)
-            except Exception:
-                # state for batch_id-1 must exist once batch 0 ran;
-                # surface the gap instead of silently dropping carry
-                raise
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        iv = (
-            e.withColumn("nxt", F.lead("ts").over(w))
-            .withColumn(
-                "dur",
-                F.unix_micros(F.col("nxt").cast("timestamp"))
-                - F.unix_micros(F.col("ts").cast("timestamp")),
             )
-        )
-        dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-        closed = iv.filter(F.col("dur").isNotNull())
-        part = closed.groupBy("event_type").agg(
-            F.count("*").cast("long").alias("n_intervals"),
-            F.sum(dec("vc") * dec("dur")).alias("num"),
-            F.sum(dec("dur")).alias("den"),
-        )
-        part.write.mode("overwrite").parquet(
+        spec.partial(e).write.mode("overwrite").parquet(
             f"{partials_path}/batch_id={batch_id}"
         )
-        # new state: each user's LAST event (the open interval start)
-        last = (
-            iv.filter(F.col("nxt").isNull())
-            .select("user_id", "event_id", "event_type", "ts", "vc")
-        )
-        last.write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
+        aggregates.twa_intervals(e).filter(F.col("nxt").isNull()).select(
+            "user_id", "event_id", "event_type", "ts", "vc"
+        ).write.mode("overwrite").parquet(f"{state_path}/batch_id={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(_batch)
@@ -1231,342 +390,54 @@ def start_twa_partials(
     )
 
 
-def twa_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-event-type time-weighted average from the staged interval
-    partials — identical output contract to queries.q182
-    (event_type, n_intervals, twa_value). The partial (n, num, den)
-    sums are additive and exact (integer cents×µs in decimal(38,0)),
-    so summing them reproduces the batch aggregate bit-for-bit; the
-    terminal division chain mirrors q182's."""
-    from vnavc_spark.functions.portable import stable_round
-
-    a = (
-        spark.read.parquet(partials_path)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n_intervals").cast("long").alias("n_intervals"),
-            F.sum("num").cast("decimal(38,0)").alias("num"),
-            F.sum("den").cast("decimal(38,0)").alias("den"),
-        )
-    )
-    return a.select(
-        "event_type",
-        "n_intervals",
-        stable_round(
-            F.col("num").cast("double")
-            / F.col("den").cast("double")
-            / F.lit(100.0),
-            6,
-        ).alias("twa_value"),
-    )
-
-
-def start_name_counts(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    name_col: str = "c_name",
-):
-    """Stream side of the record-linkage monitor (queries.q202's
-    streaming twin): each micro-batch aggregates ITS OWN rows to
-    (nm, n_recs) name-count partials under
-    ``partials_path/batch_id=N``. Counts are ADDITIVE integers and a
-    replayed batch id overwrites its own partial in place
-    (replay-idempotent). The blocking + verify is NOT run per batch —
-    linkage pairs are a corpus-level product, recomputed on demand by
-    :func:`name_linkage_snapshot` at distinct-entity cost (the
-    expensive deletion-variant join never runs inside the stream)."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(F.col(name_col).isNotNull())
-            .groupBy(F.col(name_col).alias("nm"))
-            .agg(F.count("*").cast("long").alias("n_recs"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def name_linkage_snapshot(
-    spark, partials_path: str, radius: int = 1
-) -> DataFrame:
-    """Linkage pairs from the staged name-count partials — identical
-    output contract to queries.q202 (name_a, name_b, n_recs_a,
-    n_recs_b, dist). Summing the additive partials reproduces the
-    batch entity table EXACTLY (exact-duplicate records collapse to
-    one row with the true corpus-wide record count, even when copies
-    arrived in different batches), and the shared
-    ``dedup.name_linkage_pairs`` core does the blocking + verify —
-    streaming == batch is an identity, not an approximation
-    (parity-tested in tests/test_streaming.py). ``radius=2`` serves
-    queries.q207's radius-2 rollup from the SAME staged partials —
-    one staging contract, both blocking depths."""
-    from vnavc_spark.operators.dedup import name_linkage_pairs
-
-    names = (
-        spark.read.parquet(partials_path)
-        .groupBy("nm")
-        .agg(F.sum("n_recs").cast("long").alias("n_recs"))
-    )
-    return name_linkage_pairs(names, radius=radius)
-
-
-def start_qi_class_counts(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-):
-    """Stream side of the k-anonymity privacy monitor
-    (queries.q196's streaming twin): each micro-batch aggregates ITS
-    OWN rows to (nk, seg, band, sz) quasi-identifier class-count
-    partials under ``partials_path/batch_id=N`` — q196's exact QI
-    projection (nation, market segment, account-balance kilo-band).
-    Class sizes are ADDITIVE integers, so the corpus-wide class
-    table is a plain sum over batch partials; a replayed batch id
-    overwrites its own partial in place. The k<5 audit is NOT run
-    per batch — a class can be risky in every batch yet safe
-    corpus-wide, so the threshold only means anything on the summed
-    table, recomputed on demand by :func:`k_anonymity_snapshot`."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(
-                F.col("c_nationkey").isNotNull()
-                & F.col("c_mktsegment").isNotNull()
-                & F.col("c_acctbal").isNotNull()
-            )
-            .groupBy(
-                F.col("c_nationkey").cast("long").alias("nk"),
-                F.col("c_mktsegment").alias("seg"),
-                F.floor(F.col("c_acctbal") / F.lit(1000.0))
-                .cast("long")
-                .alias("band"),
-            )
-            .agg(F.count("*").cast("long").alias("sz"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def k_anonymity_snapshot(spark, partials_path: str) -> DataFrame:
-    """Per-nation k-anonymity audit from the staged QI class-count
-    partials — identical output contract to queries.q196 (nationkey,
-    n_classes, n_rows, n_risky_classes, n_risky_rows). Summing the
-    additive partials reproduces the batch class table EXACTLY —
-    crucially, a class split across batches is judged on its
-    CORPUS-WIDE size, never its per-batch fragments — and the shared
-    ``aggregates.k_anonymity_rollup`` core does the rest (streaming
-    == batch identity, parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.aggregates import k_anonymity_rollup
-
-    cls = (
-        spark.read.parquet(partials_path)
-        .groupBy("nk", "seg", "band")
-        .agg(F.sum("sz").cast("long").alias("sz"))
-    )
-    return k_anonymity_rollup(cls, k=5)
-
-
-def start_entity_attr_partials(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint: str,
-    name_col: str = "c_name",
-    nation_col: str = "c_nationkey",
-    segment_col: str = "c_mktsegment",
-    acctbal_col: str = "c_acctbal",
-):
-    """Stream side of the Fellegi-Sunter monitor (queries.q208's
-    streaming twin): each micro-batch aggregates ITS OWN rows to
-    per-name entity partials (nm, n_recs, nation, segment, bal_band)
-    under ``partials_path/batch_id=N``. Every field is MERGEABLE —
-    counts are additive and the attribute representatives are mins
-    (min of per-batch mins == corpus min; Spark's min aggregate
-    ignores nulls, so an attribute that is null in one batch and
-    present in another merges to the present value, exactly like the
-    batch groupBy) — so the snapshot reproduces q208's entity table
-    even when a name's records arrive across batches. A replayed
-    batch id overwrites its own partial in place (replay-idempotent).
-    The blocking + scoring never runs inside the stream —
-    :func:`fellegi_sunter_snapshot` recomputes it on demand at
-    distinct-entity cost."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.filter(F.col(name_col).isNotNull())
-            .groupBy(F.col(name_col).alias("nm"))
-            .agg(
-                F.count("*").cast("long").alias("n_recs"),
-                F.min(nation_col).alias("nation"),
-                F.min(segment_col).alias("segment"),
-                F.min(
-                    F.floor(F.col(acctbal_col) / F.lit(1000.0))
-                ).alias("bal_band"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{partials_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _merged_entities(spark, partials_path: str) -> DataFrame:
-    """Corpus-wide entity table from the staged entity-attr partials
-    — sum counts, min attributes (min of per-batch mins == corpus
-    min; null-in-one-batch merges to the present value exactly like
-    the batch groupBy). Single authority for the three ER twins
-    (fellegi-sunter, agreement-patterns, entity-clusters) so their
-    merge semantics cannot drift."""
-    return (
-        spark.read.parquet(partials_path)
-        .groupBy("nm")
-        .agg(
-            F.sum("n_recs").cast("long").alias("n_recs"),
-            F.min("nation").alias("nation"),
-            F.min("segment").alias("segment"),
-            F.min("bal_band").alias("bal_band"),
-        )
-    )
-
-
-def fellegi_sunter_snapshot(spark, partials_path: str) -> DataFrame:
-    """Fellegi-Sunter decision rollup from the staged entity
-    partials — identical output contract to queries.q208 (decision,
-    dist, n_pairs, n_agree_nation, n_agree_segment, n_agree_balband,
-    sum_weight) with q208's exact fixed integer weights and
-    thresholds. Merging the partials (sum counts, min attributes)
-    reproduces the batch entity table EXACTLY, and the shared
-    ``dedup.name_linkage_pairs`` + ``dedup.fellegi_sunter_scores``
-    cores do the blocking + scoring — streaming == batch is an
-    identity, not an approximation (parity-tested in
-    tests/test_streaming.py)."""
-    from vnavc_spark.operators.dedup import (
-        fellegi_sunter_customer_scores,
-        fellegi_sunter_rollup,
-        name_linkage_pairs,
-    )
-
-    ent = _merged_entities(spark, partials_path)
-    pairs = name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    return fellegi_sunter_rollup(
-        fellegi_sunter_customer_scores(pairs, ent)
-    )
-
-
-def entity_clusters_snapshot(spark, partials_path: str) -> DataFrame:
-    """Entity clusters from the staged entity partials — identical
-    output contract to queries.q209 (nm, entity_id, n_recs): the
-    SAME staging as the fellegi-sunter and agreement-patterns twins
-    serves the full decide→cluster tail too (one partial contract,
-    the whole ER readout family). Merged partials reproduce the
-    batch entity table exactly; the shared blocking + scoring cores
-    produce the match pairs; ``dedup.dedup_clusters`` (min-label CC
-    with severed checkpoints) groups them — streaming == batch is an
-    identity (parity-tested in tests/test_streaming.py). The match
-    edge set is decision-filtered (tiny vs candidates) and
-    localCheckpointed before the CC loop, the q209 stance."""
-    from vnavc_spark.operators.dedup import (
-        dedup_clusters,
-        fellegi_sunter_customer_scores,
-        name_linkage_pairs,
-    )
-
-    ent = _merged_entities(spark, partials_path)
-    pairs = name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    scored = fellegi_sunter_customer_scores(pairs, ent)
-    matches = scored.filter(F.col("decision") == "match").select(
-        F.col("name_a").alias("doc_a"), F.col("name_b").alias("doc_b")
-    ).localCheckpoint()
-    clusters = dedup_clusters(matches).select(
-        F.col("doc_id").alias("nm"), F.col("cluster_id").alias("entity_id")
-    )
-    return clusters.join(ent.select("nm", "n_recs"), "nm").select(
-        "nm", "entity_id", "n_recs"
-    )
-
-
-def agreement_patterns_snapshot(spark, partials_path: str) -> DataFrame:
-    """Agreement-pattern histogram from the staged entity partials —
-    identical output contract to queries.q210 (dist, agree_nation,
-    agree_segment, agree_bal_band, n_pairs). SAME staging as the
-    fellegi-sunter twin (start_entity_attr_partials): one partial
-    contract serves the scorer, the decision rollup, AND the
-    model-estimation sufficient statistic — streaming == batch is an
-    identity through the shared blocking + scoring cores
-    (parity-tested in tests/test_streaming.py)."""
-    from vnavc_spark.operators.dedup import (
-        fellegi_sunter_customer_scores,
-        fs_agreement_patterns,
-        name_linkage_pairs,
-    )
-
-    ent = _merged_entities(spark, partials_path)
-    pairs = name_linkage_pairs(ent.select("nm", "n_recs"), radius=2)
-    return fs_agreement_patterns(
-        fellegi_sunter_customer_scores(pairs, ent)
-    )
+# perfbench/workloads.py calls these twins by name, with positional
+# arguments.
+start_digit_partials = partial(start_partials, spec=aggregates.benford_spec())
+start_hll_register_partials = partial(start_partials, spec=aggregates.hll_spec())
+start_kmv_value_partials = partial(start_partials, spec=aggregates.kmv_spec())
+benford_snapshot = partial(snapshot, spec=aggregates.benford_spec())
+hll_snapshot = partial(snapshot, spec=aggregates.hll_spec())
+kmv_snapshot = partial(snapshot, spec=aggregates.kmv_spec())
+twa_snapshot = partial(snapshot, spec=aggregates.twa_spec())
 
 
 #: Single authority for the streaming-twin surface: twin name ->
-#: (snapshot fn, start fn, accepted tuning flags, parity-pinned batch
-#: queries, staged-partial schema). The `monitor` CLI derives its
-#: command table from this dict and tools/gen_monitors.py renders
-#: docs/MONITORS.md from it, so the CLI, the doc, and the code cannot
-#: drift apart (test_cli pins the derivation; test_streaming pins
-#: each twin's streaming == batch parity).
+#: (spec factory, its tuning flags, parity-pinned batch queries,
+#: staged-partial schema, guards, and ``start`` when the twin needs
+#: its own starter). The `monitor` CLI derives its command table from
+#: this dict and tools/gen_monitors.py renders docs/MONITORS.md from
+#: it, so the CLI, the doc, and the code cannot drift apart (test_cli
+#: pins the derivation; test_streaming pins each twin's streaming ==
+#: batch parity). Each flag is a keyword of the spec factory.
 TWINS: dict[str, dict] = {
     "windowed-topk": {
-        "snapshot": "windowed_topk_snapshot",
-        "start": "start_windowed_type_counts",
+        "spec": ordering.window_topk_spec,
         "flags": ("k",),
         "batch": ("q156_window_topk",),
         "partials": "(wstart, event_type, n) per batch_id=N",
     },
     "cms-cells": {
-        "snapshot": "cms_cells_snapshot",
-        "start": "start_streaming_cms",
+        "spec": aggregates.cms_spec,
         "flags": (),
         "batch": ("q116_heavy_hitters",),
         "partials": "(seed, bucket, est) CMS cells per batch_id=N "
         "(<= depth*width rows/batch)",
     },
     "ks-drift": {
-        "snapshot": "ks_drift_snapshot",
-        "start": "start_length_histograms",
+        "spec": ordering.ks_drift_spec,
         "flags": (),
         "batch": ("q170_ks_drift",),
         "partials": "(source, n_chars, cnt) histogram per batch_id=N",
     },
     "quantile-drift": {
-        "snapshot": "quantile_drift_snapshot",
-        "start": "start_length_histograms",
+        "spec": ordering.quantile_drift_spec,
         "flags": (),
         "batch": ("q192_quantile_drift",),
         "partials": "(source, n_chars, cnt) histogram per batch_id=N "
         "(same staging as ks-drift)",
     },
     "score-separation": {
-        "snapshot": "score_separation_snapshot",
-        "start": "start_label_histograms",
+        "spec": ordering.score_separation_spec,
         "flags": ("group", "value"),
         "batch": (
             "q186_score_separation",
@@ -1577,41 +448,35 @@ TWINS: dict[str, dict] = {
         "histogram per batch_id=N",
     },
     "average-precision": {
-        "snapshot": "average_precision_snapshot",
-        "start": "start_label_histograms",
+        "spec": ordering.average_precision_spec,
         "flags": ("group", "value"),
         "batch": ("q217_average_precision",),
         "partials": "(group, value, cnt, cnt_pos) class-conditional "
         "histogram per batch_id=N (same staging as score-separation)",
     },
     "session-survival": {
-        "snapshot": "session_survival_snapshot",
-        "start": "start_session_span_partials",
+        "spec": aggregates.session_survival_spec,
         "flags": (),
         "batch": ("q223_session_survival",),
-        "partials": "(user_id, f_sec, l_sec) per-batch PARTIAL "
-        "session spans per batch_id=N (snapshot merges spans with "
-        "the gap rule — the session-window merge identity)",
+        "partials": "(user_id, f, l) per-batch PARTIAL session spans "
+        "per batch_id=N (merged with the gap rule — the "
+        "session-window merge identity)",
     },
     "benford": {
-        "snapshot": "benford_snapshot",
-        "start": "start_digit_partials",
+        "spec": aggregates.benford_spec,
         "flags": (),
         "batch": ("q188_benford_gate",),
         "partials": "(pri, d, obs) leading-digit counts per "
         "batch_id=N (<= 9 digit rows per group)",
     },
     "benford-summation": {
-        "snapshot": "benford_summation_snapshot",
-        "start": "start_digit_mass_partials",
+        "spec": aggregates.benford_summation_spec,
         "flags": (),
         "batch": ("q205_benford_summation",),
-        "partials": "(seg, d, m) per-digit decimal(38,0) mass per "
-        "batch_id=N",
+        "partials": "(seg, d, m) per-digit long cent mass per batch_id=N",
     },
     "hll": {
-        "snapshot": "hll_snapshot",
-        "start": "start_hll_register_partials",
+        "spec": aggregates.hll_spec,
         "flags": ("b",),
         "batch": ("q47_approx_sketches",),
         "partials": "regs/batch_id=N register maxima + "
@@ -1625,30 +490,27 @@ TWINS: dict[str, dict] = {
         ),
     },
     "kmv": {
-        "snapshot": "kmv_snapshot",
-        "start": "start_kmv_value_partials",
+        "spec": aggregates.kmv_spec,
         "flags": ("k",),
         "batch": ("q86_kmv_sketch",),
         "partials": "(g, v) distinct-value partials per batch_id=N",
     },
     "hhi": {
-        "snapshot": "hhi_snapshot",
-        "start": "start_mass_partials",
+        "spec": aggregates.hhi_spec,
         "flags": (),
         "batch": ("q194_hhi_concentration",),
-        "partials": "(group, mass) revenue-mass partials per "
+        "partials": "(lang, source, mc) character-mass partials per "
         "batch_id=N",
     },
     "contamination": {
-        "snapshot": "contamination_snapshot",
-        "start": "start_contamination_screen",
+        "spec": dedup.contamination_spec,
         "flags": (),
         "batch": ("q179_contamination_13gram",),
         "partials": "(doc_id, source, n_shingles, n_hits) one row "
         "per doc per batch_id=N",
     },
     "twa": {
-        "snapshot": "twa_snapshot",
+        "spec": aggregates.twa_spec,
         "start": "start_twa_partials",
         "flags": (),
         "batch": ("q182_time_weighted_avg",),
@@ -1665,8 +527,7 @@ TWINS: dict[str, dict] = {
         ),
     },
     "name-linkage": {
-        "snapshot": "name_linkage_snapshot",
-        "start": "start_name_counts",
+        "spec": dedup.name_linkage_spec,
         "flags": ("radius",),
         "batch": ("q202_name_linkage", "q207_radius2_linkage"),
         "partials": "(nm, n_recs) additive name counts per "
@@ -1684,8 +545,7 @@ TWINS: dict[str, dict] = {
         ),
     },
     "agreement-patterns": {
-        "snapshot": "agreement_patterns_snapshot",
-        "start": "start_entity_attr_partials",
+        "spec": dedup.agreement_patterns_spec,
         "flags": (),
         "batch": ("q210_agreement_patterns",),
         "partials": "(nm, n_recs, nation, segment, bal_band) "
@@ -1693,8 +553,7 @@ TWINS: dict[str, dict] = {
         "fellegi-sunter)",
     },
     "fellegi-sunter": {
-        "snapshot": "fellegi_sunter_snapshot",
-        "start": "start_entity_attr_partials",
+        "spec": dedup.fellegi_sunter_spec,
         "flags": (),
         "batch": ("q208_fellegi_sunter",),
         "partials": "(nm, n_recs, nation, segment, bal_band) "
@@ -1702,8 +561,7 @@ TWINS: dict[str, dict] = {
         "min attributes)",
     },
     "entity-clusters": {
-        "snapshot": "entity_clusters_snapshot",
-        "start": "start_entity_attr_partials",
+        "spec": dedup.entity_clusters_spec,
         "flags": (),
         "batch": ("q209_entity_clusters",),
         "partials": "(nm, n_recs, nation, segment, bal_band) "
@@ -1712,8 +570,7 @@ TWINS: dict[str, dict] = {
         "cluster readouts)",
     },
     "k-anonymity": {
-        "snapshot": "k_anonymity_snapshot",
-        "start": "start_qi_class_counts",
+        "spec": aggregates.k_anonymity_spec,
         "flags": (),
         "batch": ("q196_k_anonymity",),
         "partials": "(nk, seg, band, sz) QI-class counts per "
