@@ -196,20 +196,6 @@ class TestEmbeddingNeardupLsh:
             assert len(lsh) / len(brute) >= 0.3  # LSH recall floor
 
 
-class TestVectorizedCosine:
-    def test_matches_hof_path(self, spark, emb):
-        queries = emb.filter(F.col("vec_id") < 5)
-        hof = similarity.cosine_topk(emb, queries, k=10).collect()
-        vec = similarity.cosine_topk_vectorized(emb, queries, k=10).collect()
-        h = {(r.query_id, r.neighbor_id): r.score for r in hof}
-        v = {(r.query_id, r.neighbor_id): r.score for r in vec}
-        # identical neighbor sets; scores equal to 1e-6 (summation
-        # order differs between BLAS and the sequential fold)
-        assert set(h) == set(v)
-        for kk in h:
-            assert abs(h[kk] - v[kk]) <= 1e-6
-
-
 class TestBucketCaps:
     def test_degenerate_corpus_is_bounded(self, spark):
         # 200 identical docs would generate 200²/2 ≈ 20k pairs per
@@ -227,15 +213,6 @@ class TestBucketCaps:
         pairs = dedup.minhash_dedup_pairs(df, threshold=0.8, max_bucket_size=50)
         got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
         assert got == {(900, 901)}
-
-    def test_oversized_buckets_reports_drops(self, spark):
-        rows = [(i, "same same text here okay") for i in range(60)]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        bands = dedup.minhash_bands(df)
-        over = dedup.oversized_buckets(bands, ["band_idx", "band_key"], cap=50)
-        got = over.collect()
-        # identical docs share all 4 band buckets, each with 60 members
-        assert len(got) == 4 and all(r.n_members == 60 for r in got)
 
     def test_cap_none_is_identity(self, docs):
         capped = dedup.minhash_candidates(docs, max_bucket_size=None)
@@ -368,41 +345,6 @@ class TestIncrementalDedup:
             for r in dedup.minhash_dedup_pairs(docs).collect()
         }
         assert from_table == batch
-
-
-class TestStagedIvf:
-    def test_staged_equals_fresh_and_incremental_assign(self, spark, emb, tmp_path):
-        idx = str(tmp_path / "ivf")
-        base = emb.filter(F.col("vec_id") < 40)
-        similarity.stage_ivf_index(base, idx, n_cells=8)
-        queries = emb.filter(F.col("vec_id") < 3)
-        fresh = {
-            (r.query_id, r.neighbor_id)
-            for r in similarity.ivf_topk(
-                base, queries, k=5, n_cells=8, nprobe=3
-            ).collect()
-        }
-        staged = {
-            (r.query_id, r.neighbor_id)
-            for r in similarity.ivf_topk_staged(
-                queries, idx, k=5, nprobe=3
-            ).collect()
-        }
-        assert staged == fresh  # deterministic index -> identical probe
-
-        # incremental: only unseen vectors get assigned
-        n = similarity.ivf_assign_incremental(emb, idx)
-        total = spark.read.parquet(f"{idx}/assignments").count()
-        assert n == emb.count() - 40
-        assert total == emb.count()
-        # re-run: zero new work
-        assert similarity.ivf_assign_incremental(emb, idx) == 0
-        # staged search now sees the newly assigned vectors
-        wider = {
-            r.neighbor_id
-            for r in similarity.ivf_topk_staged(queries, idx, k=20, nprobe=8).collect()
-        }
-        assert any(v >= 40 for v in wider)
 
 
 class TestArrowBucketsMatchCatalyst:
@@ -563,19 +505,6 @@ class TestDedupClusters:
         finally:
             spark.conf.unset(key)
 
-    def test_drop_near_dups_keeps_representatives(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"doc {i}") for i in (1, 2, 3, 10, 11, 99)],
-            ["doc_id", "text"],
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], ["doc_a", "doc_b"]
-        )
-        kept = sorted(
-            r.doc_id for r in dedup.drop_near_dups(docs, pairs).collect()
-        )
-        assert kept == [1, 10, 99]  # reps of each cluster + untouched doc
-
 
 class TestSemDeDup:
     def test_pairs_subset_of_bruteforce_with_recall(self, spark, emb):
@@ -616,14 +545,6 @@ class TestSemDeDup:
             for r in similarity.semdedup_pairs(emb, 0.4, n_cells=8).collect()
         )
         assert p1 == p2
-
-    def test_keep_one_survivors(self, emb):
-        pairs = similarity.semdedup_pairs(emb, 0.4, n_cells=8).collect()
-        dropped = {r.vec_b for r in pairs}
-        kept = {r.vec_id for r in similarity.semdedup(emb, 0.4, n_cells=8).collect()}
-        total = {r.vec_id for r in emb.select("vec_id").collect()}
-        assert kept == total - dropped
-        assert kept  # never drops everything
 
 
 class TestSimhashFormsAgree:

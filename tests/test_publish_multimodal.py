@@ -1,15 +1,13 @@
-"""Publish stage (K7/K8/G5/A10) and multimodal column tests."""
+"""Publish stage (K7/K8/G5/A10) tests."""
 
 from __future__ import annotations
 
 import json
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from tests.test_audio_pipeline import tone, write_wav
-from vnavc_spark.pipeline import multimodal as MM
 from vnavc_spark.pipeline import publish as P
 
 
@@ -72,59 +70,3 @@ class TestPublish:
             lines += [json.loads(ln) for ln in open(f)]
         assert len(lines) == 6 and all("text" in d for d in lines)
 
-
-class TestMultimodal:
-    def test_audio_features_from_blobs(self, spark, tmp_path):
-        for i, amp in enumerate((0.2, 0.8)):
-            write_wav(str(tmp_path / f"a{i}.wav"), tone(440, 0.5, 8000, amp=amp), 8000)
-        blobs = MM.scan_blobs(spark, str(tmp_path), "*.wav", "audio")
-        assert blobs.count() == 2
-        feats = {r.path.split("/")[-1]: r for r in MM.audio_features(blobs).collect()}
-        assert feats["a0.wav"].sample_rate == 8000
-        assert feats["a0.wav"].duration == pytest.approx(0.5, abs=0.01)
-        assert feats["a1.wav"].peak > feats["a0.wav"].peak
-
-    def test_image_features_with_fake_decoder(self, spark, tmp_path):
-        (tmp_path / "img1.png").write_bytes(b"\x89PNG-fake-1")
-        blobs = MM.scan_blobs(spark, str(tmp_path), "*.png", "image")
-
-        def fake_decoder(data: bytes) -> np.ndarray:
-            v = len(data) % 255
-            return np.full((4, 6, 3), v, dtype=np.uint8)
-
-        r = MM.image_features(blobs, decoder=fake_decoder).first()
-        assert (r.width, r.height, r.n_channels) == (6, 4, 3)
-        assert r.mean_luma == pytest.approx(len(b"\x89PNG-fake-1") % 255)
-
-    def test_resize_nearest_shapes(self):
-        img = np.arange(24, dtype=np.uint8).reshape(4, 6)
-        out = MM.resize_nearest(img, 3, 2)
-        assert out.shape == (2, 3)
-        assert out[0, 0] == img[0, 0]
-
-    def test_resize_images_roundtrip(self, spark, tmp_path):
-        (tmp_path / "i.png").write_bytes(b"12345")
-        blobs = MM.scan_blobs(spark, str(tmp_path), "*.png", "image")
-
-        def fake_decoder(data: bytes) -> np.ndarray:
-            return np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
-
-        r = MM.resize_images(blobs, 4, 4, decoder=fake_decoder).first()
-        arr = np.frombuffer(r.content, dtype=np.uint8).reshape(4, 4, 3)
-        assert (r.width, r.height) == (4, 4)
-        assert arr[0, 0, 0] == 0  # nearest keeps origin pixel
-
-    def test_frame_sampling_udtf_shape(self, spark, tmp_path):
-        (tmp_path / "v.mp4").write_bytes(b"fake-video")
-        blobs = MM.scan_blobs(spark, str(tmp_path), "*.mp4", "video")
-
-        def fake_sampler(data: bytes, n: int):
-            return [np.full((2, 3), i, dtype=np.uint8) for i in range(n)]
-
-        rows = MM.sample_frames(blobs, n_frames=3, sampler=fake_sampler).collect()
-        assert [r.frame_idx for r in rows] == [0, 1, 2]
-        assert all((r.width, r.height) == (3, 2) for r in rows)
-
-    def test_default_decoders_gated(self):
-        with pytest.raises(NotImplementedError):
-            MM.default_frame_sampler(b"x", 2)

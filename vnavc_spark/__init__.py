@@ -4,12 +4,13 @@ Re-implements the query and data-processing semantics of the reference
 TTS data pipeline (quochuy242/VNAVC, surveyed in SURVEY.md) as an
 idiomatic Spark engine: declarative DataFrame/SQL plans optimized by
 Catalyst, pandas-UDF islands only where built-ins cannot express the
-semantics (Vietnamese NLP, DSP), and Parquet staging between stages.
+semantics (Vietnamese NLP, audio), and stage outputs that several
+actions read persisted through ``cache.tracked_persist``.
 
 Layout:
     session     — tuned SparkSession factory (AQE, Arrow, UTC)
     schemas     — explicit StructTypes for every pipeline table
-    io          — testdata/staging table readers
+    io          — testdata table readers
     functions/  — scalar/column function library (text, vietnamese,
                   quality, vector)
     operators/  — relational operator library (filters, joins,

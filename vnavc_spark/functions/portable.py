@@ -34,14 +34,3 @@ def exact_sum(col: Column, places: int = 2) -> Column:
     unscale. Matches the SQL ``sum(floor(x*10^p + 0.5))/10^p.0``."""
     scale = float(10**places)
     return F.sum(F.floor(col * scale + F.lit(0.5))) / scale
-
-
-def sql_exact_sum(expr: str, places: int = 2) -> str:
-    """DuckDB rendering of ``exact_sum`` with the identical tree."""
-    scale = 10**places
-    return f"sum(floor(({expr}) * {scale}.0 + 0.5)) / {scale}.0"
-
-
-def sql_stable_round(expr: str, places: int = 4) -> str:
-    scale = 10**places
-    return f"floor(({expr}) * {scale}.0 + 0.5) / {scale}.0"

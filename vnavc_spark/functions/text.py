@@ -16,28 +16,6 @@ from pyspark.sql import functions as F
 # T1 — normalize_name (reference __init__.py:10-29)
 # ---------------------------------------------------------------------------
 
-#: Vietnamese accented characters → NFD base letter. đ/Đ deliberately
-#: NOT mapped: it is a standalone letter, not a combining mark, and the
-#: reference's NFD strip keeps it (FIXTURES.md golden: "Đinh" → "đinh").
-_VI_ACCENTED = (
-    "àáảãạăằắẳẵặâầấẩẫậ"
-    "èéẻẽẹêềếểễệ"
-    "ìíỉĩị"
-    "òóỏõọôồốổỗộơờớởỡợ"
-    "ùúủũụưừứửữự"
-    "ỳýỷỹỵ"
-)
-_VI_BASE = "a" * 17 + "e" * 11 + "i" * 5 + "o" * 17 + "u" * 11 + "y" * 5
-if len(_VI_ACCENTED) != len(_VI_BASE):  # import-time invariant
-    raise RuntimeError("_VI_ACCENTED/_VI_BASE length mismatch")
-
-#: Uppercase variants are handled by lowercasing first.
-
-
-def strip_vietnamese_accents(col: Column | str) -> Column:
-    """De-accent Vietnamese text (lowercased input expected)."""
-    return F.translate(F.col(col) if isinstance(col, str) else col, _VI_ACCENTED, _VI_BASE)
-
 
 def _build_deaccent_table() -> tuple[str, str]:
     """Precompute the NFD-equivalent de-accent map for every LOWERCASE

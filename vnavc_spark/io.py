@@ -1,4 +1,4 @@
-"""Table loaders for the driver testdata and Parquet staging areas.
+"""Table loaders for the driver testdata.
 
 The synthetic testdata (TESTDATA.md) is a TPC-H-ish star schema plus
 ``events`` / ``documents`` / ``embeddings``; the correctness oracle

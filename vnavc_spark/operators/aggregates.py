@@ -37,17 +37,6 @@ def parts_by_book(
     )
 
 
-def success_counts(df: DataFrame, flag_col: str) -> DataFrame:
-    """G4: success/failure tallies (``crawler/download.py:248-257``)."""
-    return df.groupBy(flag_col).agg(F.count("*").alias("n"))
-
-
-def corpus_duration_hours(df: DataFrame, duration_col: str = "duration") -> DataFrame:
-    """G5: total corpus duration in hours
-    (``push_to_hf.py:125-127,143-144``)."""
-    return df.agg((F.sum(duration_col) / 3600.0).alias("total_hours"))
-
-
 def weighted_wer(
     df: DataFrame,
     group: str | list[str] = "book_id",

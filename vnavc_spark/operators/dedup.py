@@ -309,7 +309,7 @@ def cap_bucket_size(
     the input twice, which re-runs the upstream Arrow signature pass
     (measured +20% on the whole pipeline). The in-partition sort is
     over ~50-byte bucket rows — noise next to a recomputed Python
-    stage. Use ``oversized_buckets`` to see what was dropped."""
+    stage."""
     if cap is None:
         return df
     w = Window.partitionBy(*keys)
@@ -317,19 +317,6 @@ def cap_bucket_size(
         df.withColumn("_bucket_n", F.count("*").over(w))
         .filter(F.col("_bucket_n") <= cap)
         .drop("_bucket_n")
-    )
-
-
-def oversized_buckets(
-    df: DataFrame, keys: list[str], cap: int
-) -> DataFrame:
-    """Audit view of what ``cap_bucket_size`` drops: one row per
-    over-cap bucket with its member count. Run (and log) alongside
-    any capped candidate join."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("n_members"))
-        .filter(F.col("n_members") > cap)
     )
 
 
@@ -669,59 +656,6 @@ def simhash_near_dups(
         .withColumn("hamming", simhash_hamming(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def hamming_near_dups(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    max_hamming: int = 6,
-    bits: int = 64,
-    max_block_size: int | None = 1000,
-) -> DataFrame:
-    """Generic Hamming-ball self-join over any integer hash column
-    (pHash image near-dup, audio fingerprints, 64-bit SimHash):
-    the Manku k+1-block decomposition at arbitrary width — recall 1.0
-    at distance ≤ ``max_hamming``, candidates only where a block
-    matches. Uses ``shiftrightunsigned`` so the sign bit of a full
-    64-bit hash (stored in a signed long) blocks correctly;
-    ``bit_count`` over XOR is two's-complement-safe for the exact
-    verify. Returns (id_a, id_b, hamming)."""
-    src = df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-    bounds = simhash_block_bounds(max_hamming, bits)
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("block_idx"),
-                F.shiftrightunsigned(F.col("_h"), lo)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("block_val"),
-            )
-            for j, (lo, width) in enumerate(bounds)
-        ]
-    )
-    blocked = src.select("_id", "_h", F.explode(blocks).alias("b")).select(
-        "_id",
-        "_h",
-        F.col("b.block_idx").alias("block_idx"),
-        F.col("b.block_val").alias("block_val"),
-    )
-    blocked = cap_bucket_size(blocked, ["block_idx", "block_val"], max_block_size)
-    a, b = blocked.alias("a"), blocked.alias("b")
-    return (
-        a.join(b, on=["block_idx", "block_val"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._h").alias("h_a"),
-            F.col("b._h").alias("h_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", simhash_hamming(F.col("h_a"), F.col("h_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 
@@ -1212,21 +1146,6 @@ def dedup_clusters(
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-
-
-def drop_near_dups(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep one representative (the min id) per near-dup cluster —
-    the end-to-end corpus dedup: every doc in a cluster except its
-    representative is dropped; docs in no pair pass through."""
-    clusters = dedup_clusters(pairs)
-    losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
 
 
 def ngram_hashes(

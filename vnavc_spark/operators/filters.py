@@ -21,11 +21,6 @@ def not_contains(df: DataFrame, col: str, needle: str) -> DataFrame:
     return df.filter(c.isNull() | ~c.contains(needle))
 
 
-def drop_null(df: DataFrame, *cols: str) -> DataFrame:
-    """F2: project + drop nulls (``crawler/metadata.py:344-347``)."""
-    return df.select(*cols).na.drop()
-
-
 def substring_query(
     df: DataFrame,
     **needles: str | None,
@@ -40,12 +35,6 @@ def substring_query(
             continue
         pred = pred & F.lower(F.col(col)).contains(needle.lower())
     return df.filter(pred)
-
-
-def invalid_source_gate(df: DataFrame, source_col: str = "source") -> DataFrame:
-    """F5: drop rows tagged ``source == 'invalid'``
-    (``crawler/metadata.py:143-153``)."""
-    return df.filter(F.col(source_col) != "invalid")
 
 
 def min_words(df: DataFrame, col: str, n: int = 3) -> DataFrame:
@@ -92,26 +81,12 @@ def wer_gate(
     return books.join(bad, on=on, how="left_anti")
 
 
-def suffix_gate(df: DataFrame, col: str, suffix: str) -> DataFrame:
-    """F10/F11: extension gates (``crawler/utils.py:105-111``,
-    ``aeneas_batch_align.py:166-185``)."""
-    return df.filter(F.col(col).endswith(suffix))
-
-
 def orphan_cleanup(
     left: DataFrame, right: DataFrame, on: list[str] | str
 ) -> DataFrame:
     """F12: keep left rows with a partner in right (wav↔txt pairing,
     ``whisper_qc.py:71-75``) — a left-semi join."""
     return left.join(right, on=on, how="left_semi")
-
-
-def valid_url_filter(
-    df: DataFrame, status_col: str = "status_code"
-) -> DataFrame:
-    """S5 semantics: HTTP status < 400 ⇒ valid
-    (``crawler/utils.py:245-272``)."""
-    return df.filter(F.col(status_col) < 400)
 
 
 def bloom_positions(key, n_hashes: int = 3, n_bits: int = 1024):

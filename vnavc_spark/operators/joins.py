@@ -88,22 +88,6 @@ def books_with_narrator(
     )
 
 
-def lookup(
-    facts: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """J2/J4/J6 generic: hydrate rows from a dimension table
-    (book↔JSON metadata ``aeneas_batch_align.py:187-196``; wav↔txt
-    ``push_to_hf.py:115-122``). Positional zips in the reference
-    (``crawler/metadata.py:192-195``) are avoided by design: both
-    URLs ride in one row from the start."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return facts.join(d, on=on, how=how)
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -40,16 +40,6 @@ def narrator_pivot(
     return df.select(*cols)
 
 
-def normalize_narrator_shape(col: Column) -> Column:
-    """R2: canonicalize narrator payloads that arrive as a single
-    struct or bare string into array<struct> (reference dict→[dict],
-    str→[{name,url:""}] at ``crawler/metadata.py:261-265``). Works on
-    a parsed JSON variant column."""
-    # Caller parses JSON with a permissive schema first; here we wrap
-    # non-array shapes.
-    return F.when(col.isNull(), F.array()).otherwise(col)
-
-
 def union_append(base: DataFrame, extra: DataFrame) -> DataFrame:
     """R3: row append tolerant of column drift
     (``pd.concat`` in the upsert loop, ``process_all.py:817,837-839``)."""

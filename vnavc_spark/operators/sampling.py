@@ -11,8 +11,6 @@ group in one window pass, no collect.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -63,11 +61,6 @@ def exact_k_global(
         .limit(k)
         .drop("_h")
     )
-
-
-def ceil_pct(n: int, pct: float, min_k: int = 1) -> int:
-    """Driver-side helper mirroring the sample-size rule."""
-    return max(min_k, math.ceil(n * pct))
 
 
 def temperature_mixture(

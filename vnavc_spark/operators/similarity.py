@@ -379,24 +379,8 @@ def ivf_topk(
     from vnavc_spark.cache import tracked_persist
 
     assigned = tracked_persist(assigned, "ivf_assigned")
-    return _ivf_probe_topk(
-        assigned, centroids, queries, k, nprobe, id_col, vec_col, query_id_col
-    )
-
-
-def _ivf_probe_topk(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Probe stage shared by the in-memory and STAGED index paths:
-    rank cells per query by centroid cosine, equi-join the top
-    ``nprobe`` cells against the assignment table, exact-rerank."""
+    # probe: rank cells per query by centroid cosine, equi-join the top
+    # ``nprobe`` cells against the assignment table, exact-rerank
     c = F.broadcast(centroids)
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("q_vec")
@@ -430,68 +414,6 @@ def _ivf_probe_topk(
         F.col(id_col).alias("neighbor_id"),
         _stable_round(cosine("q_vec", vec_col), 6).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "score", "rank")
-    )
-
-
-def cosine_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact brute-force top-k, Arrow/numpy path: the query matrix is
-    collected (small by contract) and shipped in the UDF closure; each
-    corpus batch scores against ALL queries with one BLAS matmul.
-
-    Same semantics as ``cosine_topk``; trades interpreted per-element
-    Catalyst HOF math for vectorized numpy — the right engine when
-    queries × dim is non-trivial (one matmul per Arrow batch vs
-    3 interpreted array folds per pair). Scores can differ from the
-    HOF path in the last float bits (BLAS pairwise summation), hence
-    a separate entry rather than a drop-in replacement for the
-    oracle-matched q28."""
-    import numpy as np
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    # small-by-contract: the matrix ships in every task's closure —
-    # explicit raise, not assert, so the bound survives `python -O`
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            f"query set too large to broadcast in-closure "
-            f"({len(q_rows)} rows); use lsh_topk/ivf_topk for query "
-            "sets beyond ~100k vectors"
-        )
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # floor both norms: an all-zero vector otherwise yields inf/nan
-    # scores where the Catalyst cosine() path returns NULL
-    q_norm = np.maximum(np.linalg.norm(q_mat, axis=1), 1e-300)
-
-    def _score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            sims = (q_mat @ c_mat.T) / np.outer(q_norm, np.maximum(c_norm, 1e-300))
-            out = {
-                query_id_col: np.repeat(q_ids, len(ids)),
-                "neighbor_id": np.tile(ids, len(q_ids)),
-                "score": np.floor(sims.ravel() * 1e6 + 0.5) / 1e6,
-            }
-            yield pd.DataFrame(out)
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema=f"{query_id_col} long, neighbor_id long, score double"
-    ).filter(F.col(query_id_col) != F.col("neighbor_id"))
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -610,74 +532,6 @@ def embedding_norm_stats(
 
 
 # ---------------------------------------------------------------------------
-# persistent IVF index (incremental ANN workflow)
-# ---------------------------------------------------------------------------
-
-def stage_ivf_index(
-    corpus: DataFrame,
-    index_path: str,
-    n_cells: int = 16,
-    refine_iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Build the IVF index ONCE and persist it as two Parquet tables
-    (``centroids``, ``assignments``) — the ANN analog of the
-    incremental-dedup signature table: the expensive clustering pass
-    never re-runs; later batches only assign their new vectors."""
-    assigned, centroids = ivf_index(
-        corpus, n_cells, refine_iters, id_col, vec_col
-    )
-    centroids.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    assigned.write.mode("overwrite").parquet(f"{index_path}/assignments")
-
-
-def ivf_assign_incremental(
-    new_vectors: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Assign only UNSEEN vectors to the staged centroids and append
-    them to the assignment table. Returns the number assigned.
-    Centroids are frozen (periodic re-clustering is a separate,
-    explicit rebuild — standard IVF practice)."""
-    spark = new_vectors.sparkSession
-    centroids = spark.read.parquet(f"{index_path}/centroids")
-    existing = spark.read.parquet(f"{index_path}/assignments").select(id_col)
-    fresh = new_vectors.select(id_col, vec_col).join(
-        existing, on=id_col, how="left_anti"
-    )
-    # localCheckpoint: the anti-join READS the table we append to —
-    # a lazily-cached plan would re-evaluate to empty after the write
-    assigned = ivf_assign(fresh, centroids, id_col, vec_col).localCheckpoint()
-    n_new = assigned.count()
-    if n_new:
-        assigned.write.mode("append").parquet(f"{index_path}/assignments")
-    return n_new
-
-
-def ivf_topk_staged(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k against the STAGED index: no clustering, no
-    corpus scan — centroids broadcast from Parquet, candidates come
-    from the assignment-table equi-join on probed cells."""
-    spark = queries.sparkSession
-    centroids = spark.read.parquet(f"{index_path}/centroids")
-    assigned = spark.read.parquet(f"{index_path}/assignments")
-    return _ivf_probe_topk(
-        assigned, centroids, queries, k, nprobe, id_col, vec_col, query_id_col
-    )
-
-
-# ---------------------------------------------------------------------------
 # SemDeDup — semantic dedup via cluster-scoped cosine pruning
 # ---------------------------------------------------------------------------
 
@@ -729,20 +583,3 @@ def semdedup_pairs(
     bv = corpus.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vec_b_vec"))
     cands = cands.join(av, on="vec_a").join(bv, on="vec_b")
     return arrow_cosine_scores(cands).filter(F.col("score") >= threshold)
-
-
-def semdedup(
-    corpus: DataFrame,
-    threshold: float = 0.45,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup keep-one filter: survivors after dropping, from every
-    semantic near-dup pair, the higher-id member (deterministic
-    keep-lowest rule; ids shuffle, vectors don't)."""
-    pairs = semdedup_pairs(
-        corpus, threshold, n_cells, id_col=id_col, vec_col=vec_col
-    )
-    drop = pairs.select(F.col("vec_b").alias(id_col)).distinct()
-    return corpus.join(drop, on=id_col, how="left_anti")

@@ -1,6 +1,6 @@
-"""Audio pipeline stage (SURVEY.md §2.8 A1-A5, A12, A14; §3.2 audio
+"""Audio pipeline stage (SURVEY.md §2.8 A1-A5; §3.2 audio
 phase): per-book part concat → quality gate → single normalized WAV,
-plus segment cutting and DSP utilities.
+plus segment cutting.
 
 100 TB posture — **path, not payload**: audio bytes never ride
 through shuffles. DataFrames carry paths + typed metadata; waveforms
@@ -13,10 +13,9 @@ stdlib ``wave`` module + numpy — fully real and tested. Compressed
 formats (mp3 etc.) need an external decoder (librosa/soundfile/ffmpeg,
 absent in this container) and are gated: ``decode_audio`` raises
 ``NotImplementedError`` for them unless a decoder import succeeds.
-Resampling is polyphase-free linear interpolation (numpy) — the
-deterministic stand-in for ``librosa.resample`` (reference
-``process_all.py:394-398``); swap ``RESAMPLER`` for a band-limited
-implementation in production.
+Resampling is ``resample_sinc``: a band-limited Kaiser-windowed-sinc
+polyphase resampler in numpy, deterministic on every executor, with
+``librosa.resample``'s semantics (reference ``process_all.py:394-398``).
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ import io
 import math
 import os
 import wave
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -164,18 +162,6 @@ def decode_audio(data: bytes, fmt: str) -> tuple[np.ndarray, int]:
 # DSP primitives (numpy, deterministic)
 # ---------------------------------------------------------------------------
 
-def resample_linear(y: np.ndarray, sr: int, target_sr: int) -> np.ndarray:
-    """A1 fast path: linear-interpolation resample — cheap but NOT
-    band-limited (aliases on downsampling). Kept for previews/tests;
-    production uses ``resample_sinc``."""
-    if sr == target_sr or len(y) == 0:
-        return y
-    n_out = int(round(len(y) * target_sr / sr))
-    x_old = np.arange(len(y), dtype=np.float64)
-    x_new = np.linspace(0.0, len(y) - 1, n_out)
-    return np.interp(x_new, x_old, y).astype(np.float32)
-
-
 def resample_sinc(
     y: np.ndarray,
     sr: int,
@@ -240,9 +226,6 @@ def resample_sinc(
     return out
 
 
-RESAMPLER = resample_sinc  # band-limited polyphase (swap point)
-
-
 def peak_normalize(y: np.ndarray, peak: float = 0.95) -> np.ndarray:
     """A2: scale so max |amplitude| = peak (reference
     ``process_all.py:400-407``); silent input returned unchanged."""
@@ -250,17 +233,6 @@ def peak_normalize(y: np.ndarray, peak: float = 0.95) -> np.ndarray:
     if m == 0.0:
         return y
     return (y / m * peak).astype(np.float32)
-
-
-def audio_info(y: np.ndarray, sr: int, nbytes: int) -> dict:
-    """A4: sample_rate / duration / size metrics
-    (``process_all.py:440-453``)."""
-    return {
-        "sample_rate": sr,
-        "duration": len(y) / sr if sr else 0.0,
-        "n_samples": len(y),
-        "audio_size": nbytes,
-    }
 
 
 def cut_segment(y: np.ndarray, sr: int, start: float, end: float) -> np.ndarray:
@@ -271,50 +243,6 @@ def cut_segment(y: np.ndarray, sr: int, start: float, end: float) -> np.ndarray:
     a = max(0, int(round(start * sr)))
     b = min(len(y), int(round(end * sr)))
     return y[a:b]
-
-
-def speech_bounds(
-    y: np.ndarray,
-    sr: int,
-    frame_ms: float = 25.0,
-    hop_ms: float = 10.0,
-    threshold_db: float = -40.0,
-) -> tuple[int, int]:
-    """A12: leading/trailing silence bounds via RMS sliding-window
-    energy (numpy strides; reference ``sparktts/utils/audio.py:
-    186-254`` uses the same energy-threshold idea). Returns sample
-    indices (start, end); (0, 0) for all-silent input."""
-    if len(y) == 0:
-        return 0, 0
-    frame = max(1, int(sr * frame_ms / 1000))
-    hop = max(1, int(sr * hop_ms / 1000))
-    if len(y) < frame:
-        rms = np.array([np.sqrt(np.mean(y**2))])
-    else:
-        n = 1 + (len(y) - frame) // hop
-        idx = np.arange(frame)[None, :] + hop * np.arange(n)[:, None]
-        rms = np.sqrt(np.mean(y[idx] ** 2, axis=1))
-    ref = float(rms.max())
-    if ref == 0.0:
-        return 0, 0
-    active = np.flatnonzero(20 * np.log10(np.maximum(rms / ref, 1e-10)) > threshold_db)
-    if len(active) == 0:
-        return 0, 0
-    start = int(active[0] * hop)
-    end = min(len(y), int(active[-1] * hop + frame))
-    return start, end
-
-
-def random_crop_or_pad(y: np.ndarray, target_len: int, seed: int) -> np.ndarray:
-    """A14: fixed-length segment — seeded random crop when longer,
-    wrap-pad when shorter (reference
-    ``sparktts/utils/audio.py:122-134``; seeded for reproducibility)."""
-    if len(y) >= target_len:
-        rng = np.random.default_rng(seed)
-        off = int(rng.integers(0, len(y) - target_len + 1))
-        return y[off : off + target_len]
-    reps = int(np.ceil(target_len / max(1, len(y))))
-    return np.tile(y, reps)[:target_len]
 
 
 # ---------------------------------------------------------------------------
@@ -368,7 +296,7 @@ def concat_book_parts(
         out_path, out_sr, total = "", target_sr, np.zeros(0, dtype=np.float32)
         if qualified:
             total = np.concatenate(
-                [peak_normalize(RESAMPLER(y, sr, target_sr)) for y, sr in zip(waves, srs)]
+                [peak_normalize(resample_sinc(y, sr, target_sr)) for y, sr in zip(waves, srs)]
             ) if waves else total
             out_path = os.path.join(output_dir, f"{book}.wav")
             os.makedirs(output_dir, exist_ok=True)

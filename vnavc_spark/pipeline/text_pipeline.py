@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from vnavc_spark.cache import tracked_persist
 from vnavc_spark.functions.quality import token_count
 from vnavc_spark.functions.text import strip_punctuation
 from vnavc_spark.pipeline.vietnamese import normalize_vi, normalize_vi_udf
@@ -278,14 +279,6 @@ def text_metrics(
     return s.join(g, on=book_col, how="full_outer")
 
 
-# at most ONE text-stage sentence cache alive per session (ADVICE
-# r03) — delegates to the shared slot tracker in vnavc_spark.cache
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    from vnavc_spark.cache import tracked_persist
-
-    return tracked_persist(df, "text_sentences")
-
-
 def process_text_stage(
     books: DataFrame,
     book_col: str = "book_id",
@@ -318,12 +311,12 @@ def process_text_stage(
     # aggregate and the grouping stage) and sits above the Python
     # island, which would otherwise re-run the tokenizer/normalizer
     # once per branch (no exchange between them for ReuseExchange to
-    # dedup — measured ~2× the island cost at sf0.1). This is the
-    # in-memory analog of the production posture: sentences ARE a
-    # staging table between stages (staging.stage_partitioned);
-    # MEMORY_AND_DISK persists spill at scale.
-    sents = _persist_tracked(
-        sentences_from_books(books, book_col, text_col, min_words=min_words)
+    # dedup — measured ~2× the island cost at sf0.1). The
+    # ``text_sentences`` slot keeps at most ONE text-stage sentence
+    # cache alive per session; MEMORY_AND_DISK persists spill at scale.
+    sents = tracked_persist(
+        sentences_from_books(books, book_col, text_col, min_words=min_words),
+        "text_sentences",
     )
     groups = group_sentences_df(sents, book_col, threshold=threshold)
     metrics = text_metrics(sents, groups, book_col)

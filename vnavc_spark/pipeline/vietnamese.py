@@ -12,11 +12,7 @@ Re-expresses the behavior of the reference's
   of the same ordered rewrite chain;
 - ``underthesea.text_normalize`` is applied when the library is
   importable and silently skipped otherwise — the exact semantics of
-  the reference, which wraps the call in try/except and continues;
-- the cheap steps (URL strip, whitespace collapse, lowercase,
-  transcript character cleanup) are ALSO exposed as native Column
-  expressions for JVM-side use when full semiotic fidelity is not
-  required (e.g. corpus-scale pre-filters).
+  the reference, which wraps the call in try/except and continues.
 
 Rewrite order is load-bearing and matches the reference exactly:
 url-strip → NFC → (underthesea) → number-format → currency → date →
@@ -30,8 +26,6 @@ import unicodedata
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 try:  # optional Vietnamese NLP lib — absent in this container
@@ -182,21 +176,3 @@ def process_transcript_udf():
             yield s.map(process_transcript)
 
     return _udf
-
-
-def with_normalized_text(
-    df: DataFrame, text_col: str = "raw", out_col: str = "norm"
-) -> DataFrame:
-    """Attach the normalized text column (pandas-UDF island; one pass,
-    no shuffle)."""
-    return df.withColumn(out_col, normalize_vi_udf()(F.col(text_col)))
-
-
-def cheap_normalize(col: Column | str) -> Column:
-    """Native (codegen'd) approximation for corpus-scale pre-filters:
-    URL strip → whitespace collapse → lower. Skips the semiotic
-    rewrites — use ``normalize_vi_udf`` when fidelity matters."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, r"https?://\S+", "")
-    c = F.regexp_replace(F.trim(c), r"\s+", " ")
-    return F.lower(c)

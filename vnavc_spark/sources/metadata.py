@@ -187,19 +187,6 @@ def read_url_list(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_books_json_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S7: per-book JSON metadata directory → one DataFrame
-    (reference globs and parses each file in a thread,
-    ``crawler/metadata.py:242-300``; ``spark.read.json`` on the glob
-    is the whole operator)."""
-    df = spark.read.option("multiLine", "true").json(path)
-    if "narrator" in df.columns:
-        df = df.withColumn(
-            "narrator", parse_narrator_cell()(F.to_json("narrator"))
-        )
-    return df
-
-
 # ---------------------------------------------------------------------------
 # the reference's ad-hoc query (F3 + F2 + F4)
 # ---------------------------------------------------------------------------
