@@ -1,10 +1,12 @@
 """The local-mode Python daemon entry (``vnavc_spark._pyworker``): its
-zip importer re-reads an archive only when the archive changed, and a
-session built outside the repo root still runs Python UDFs through it.
+zip importer re-reads an archive only when the archive changed, a
+session built outside the repo root still runs Python UDFs through it,
+and SQL UDFs and RDD-path Python share one daemon.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -75,6 +77,9 @@ def test_not_installed_from_python_3_13():
     assert zipimport.zipimporter.invalidate_caches is before
 
 
+_TRACEBACK = "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"
+
+
 class _Builder:
     """Records what ``get_spark`` asks of ``SparkSession.builder``."""
 
@@ -111,16 +116,28 @@ def test_daemon_module_only_for_local_masters(monkeypatch, master, env, local):
     monkeypatch.delenv("SPARK_MASTER", raising=False)
     for k, v in env.items():
         monkeypatch.setenv(k, v)
-    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_Builder()))
-    conf = session.get_spark(
-        master=master, extra_conf={"spark.executorEnv.PYTHONPATH": "/x"}
-    ).conf
+    conf = _fake_session(
+        monkeypatch, master=master, extra_conf={"spark.executorEnv.PYTHONPATH": "/x"}
+    )
     if local:
         assert conf["spark.python.daemon.module"] == "vnavc_spark._pyworker"
         assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join(["/x", _REPO_ROOT])
+        assert conf[_TRACEBACK] == "1"
     else:
         assert "spark.python.daemon.module" not in conf
         assert conf["spark.executorEnv.PYTHONPATH"] == "/x"
+        assert _TRACEBACK not in conf
+
+
+def _fake_session(monkeypatch, **kwargs):
+    """The conf ``get_spark(**kwargs)`` asks the session builder for."""
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_Builder()))
+    return session.get_spark(**kwargs).conf
+
+
+def test_caller_traceback_env_wins(monkeypatch):
+    conf = _fake_session(monkeypatch, master="local[2]", extra_conf={_TRACEBACK: "0"})
+    assert conf[_TRACEBACK] == "0"
 
 
 def test_session_outside_repo_root_runs_udfs(tmp_path):
@@ -155,18 +172,63 @@ def test_session_outside_repo_root_runs_udfs(tmp_path):
         spark.stop()
         """
     )
+    lines = _run_driver(script, tmp_path)
+    assert lines["XS"] == "[0, 10, 20]"
+    want = "zipimport" if sys.version_info >= (3, 13) else "vnavc_spark._pyworker"
+    assert lines["WHO"] == repr([want])
+
+
+def test_udf_and_rdd_python_share_one_daemon(tmp_path):
+    # Spark keys Python worker pools by their environment: unless RDD-path
+    # Python carries the SQL UDF runners' SPARK_SIMPLIFIED_TRACEBACK, its
+    # first task (createDataFrame from local rows is one) starts a second
+    # daemon. Workers are forked by the daemon, so their parent is it.
+    script = textwrap.dedent(
+        f"""
+        import os
+        import sys
+        sys.path.insert(0, {_REPO_ROOT!r})
+        import pandas as pd
+        from pyspark.sql import functions as F
+        from vnavc_spark.session import get_spark
+
+        spark = get_spark(
+            master="local[2]",
+            shuffle_partitions=2,
+            extra_conf={{"spark.ui.enabled": "false"}},
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+
+        @F.pandas_udf("long")
+        def daemon_pid(s: pd.Series) -> pd.Series:
+            return s.map(lambda _: os.getppid())
+
+        udf = spark.range(4).repartition(2).select(daemon_pid("id")).collect()
+        rdd = spark.sparkContext.parallelize(range(4), 2).map(
+            lambda _: os.getppid()
+        ).collect()
+        print("UDF", sorted({{r[0] for r in udf}}))
+        print("RDD", sorted(set(rdd)))
+        spark.stop()
+        """
+    )
+    lines = _run_driver(script, tmp_path)
+    udf, rdd = ast.literal_eval(lines["UDF"]), ast.literal_eval(lines["RDD"])
+    assert len(udf) == 1 and udf == rdd, lines
+
+
+def _run_driver(script: str, cwd) -> dict[str, str]:
+    """Run ``script`` in a fresh Python process in ``cwd``, with no
+    ``PYTHONPATH`` naming the repo; its ``KEY value`` output lines."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     proc = subprocess.run(
         [sys.executable, "-c", script],
-        cwd=tmp_path,
+        cwd=cwd,
         env=env,
         capture_output=True,
         text=True,
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    lines = dict(line.split(" ", 1) for line in proc.stdout.splitlines() if " " in line)
-    assert lines["XS"] == "[0, 10, 20]"
-    want = "zipimport" if sys.version_info >= (3, 13) else "vnavc_spark._pyworker"
-    assert lines["WHO"] == repr([want])
+    return dict(line.split(" ", 1) for line in proc.stdout.splitlines() if " " in line)

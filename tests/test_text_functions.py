@@ -20,6 +20,80 @@ def _one(spark, col):
     return spark.range(1).select(col.alias("v")).first()["v"]
 
 
+_VI_ALPHABET = (
+    "aàáảãạăằắẳẵặâầấẩẫậbcdđeèéẻẽẹêềếểễệghiìíỉĩịklmnoòóỏõọôồốổỗộơờớởỡợ"
+    "pqrstuùúủũụưừứửữựvxyỳýỷỹỵ"
+)
+
+
+class TestCaseMapping:
+    """``get_spark`` turns ICU case mapping off, so ``lower``/``upper``
+    use Java's ``String`` case mapping; the rows the engine sees must not
+    change."""
+
+    ICU = "spark.sql.icu.caseMappings.enabled"
+
+    def _mapped(self, spark, strings):
+        df = spark.createDataFrame([(s,) for s in strings], "s string")
+        rows = df.select("s", F.lower("s").alias("l"), F.upper("s").alias("u"))
+        return {r.s: (r.l, r.u) for r in rows.collect()}
+
+    def test_icu_off_and_on_map_the_same(self, spark):
+        assert spark.conf.get(self.ICU) == "false"
+        strings = [
+            _VI_ALPHABET,
+            _VI_ALPHABET.upper(),
+            TX.DEACCENT_SRC,
+            TX.DEACCENT_SRC.upper(),
+            "đĐ",
+            "İSTANBUL",
+            "ΟΔΟΣ ΣΟΦΙΑΣ",
+            "straße",
+        ]
+        off = self._mapped(spark, strings)
+        spark.conf.set(self.ICU, "true")
+        try:
+            on = self._mapped(spark, strings + ["ƛ"])
+        finally:
+            spark.conf.set(self.ICU, "false")
+        # the switch took effect: ICU4J's Unicode 16 tables upper ƛ to
+        # U+A7DC, a letter JDK 17's Unicode 13 tables do not have
+        assert on.pop("ƛ") == ("ƛ", "\ua7dc")
+        assert on == off
+
+    def test_lower_upper_match_duckdb(self, spark):
+        import duckdb
+
+        # DuckDB maps case one code point at a time; the few letters whose
+        # full uppercase is two code points (ǰ -> J̌, ẖ -> H̱, ...) are
+        # checked against the full mapping below instead
+        single = "".join(c for c in TX.DEACCENT_SRC if len(c.upper()) == 1)
+        strings = [
+            _VI_ALPHABET,
+            _VI_ALPHABET.upper(),
+            single,
+            single.upper(),
+            "đ",
+            "Đ",
+            "Chút Phận Linh Đinh",
+            "SÁCH hay: Tập 2 ĐƯỜNG x-y ABC def 123",
+        ]
+        con = duckdb.connect()
+        for s, (lower, upper) in self._mapped(spark, strings).items():
+            assert (lower, upper) == con.execute(
+                "SELECT lower(?), upper(?)", [s, s]
+            ).fetchone(), s
+
+    def test_full_case_mapping_kept(self, spark):
+        # Unicode's full case mapping, as Python's str.lower/upper apply
+        # it: İ lowers to i + combining dot (DuckDB gives a bare i, and so
+        # does a JVM whose default locale is tr or az), a word-final sigma
+        # to ς, ǰ uppers to J + combining caron
+        strings = ["İ", "İSTANBUL", "ΟΔΟΣ ΣΟΦΙΑΣ", TX.DEACCENT_SRC, "straße"]
+        for s, got in self._mapped(spark, strings).items():
+            assert got == (s.lower(), s.upper()), s
+
+
 class TestNormalizeName:
     def test_vietnamese_deaccent(self, spark):
         # FIXTURES golden: đ preserved (not a combining mark), accents

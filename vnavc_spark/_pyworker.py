@@ -21,6 +21,9 @@ archive is still re-read, directory finders are untouched, and a new
 for ``local`` masters only; the JVM runs it as
 ``python -m vnavc_spark._pyworker pyspark.worker``, so
 ``pyspark.daemon`` still picks its worker module from ``argv[1]``.
+Spark keeps one daemon per worker environment, so ``get_spark`` also gives
+RDD-path Python the ``SPARK_SIMPLIFIED_TRACEBACK`` that SQL UDFs carry:
+one daemon then serves both.
 """
 
 from __future__ import annotations

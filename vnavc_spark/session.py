@@ -5,8 +5,9 @@ Defaults are chosen for the 100 TB posture (SURVEY.md §7):
 - AQE on (coalesce post-shuffle partitions, skew-join splitting) —
   the reference corpus is heavily skewed (2.5 h vs 20+ h books;
   BASELINE.md "Book duration range"), so per-book groups skew hard.
-- Arrow on — every pandas-UDF island (Vietnamese NLP, DSP) transfers
-  via Arrow batches instead of pickled rows.
+- Arrow on — every pandas-UDF island (Vietnamese text, audio
+  concat/align/cut) transfers via Arrow batches instead of pickled
+  rows.
 - UTC session timezone — deterministic timestamp semantics that match
   the DuckDB correctness oracle.
 - shuffle partitions default to the local core count; on a real
@@ -21,6 +22,36 @@ Defaults are chosen for the 100 TB posture (SURVEY.md §7):
   4-core host, where a warm 5-row pandas UDF action over 4 tasks took
   0.46 s. The entry module re-reads an archive only when it has
   changed; the same action then takes 0.17 s.
+
+Two one-time costs that Spark's defaults put on a fresh session's first
+use are turned off, both measured in a warmed session on a 4-core host:
+
+- ICU case mapping off. With ``spark.sql.icu.caseMappings.enabled`` at
+  its default (true) the first ``lower()``/``upper()`` in a JVM loads
+  ICU's case-mapping tables: the first ``F.lower`` over one row took
+  1.35-1.94 s, against 0.18-0.24 s with the option off. Off, Spark maps
+  non-ASCII strings with Java's ``String.toLowerCase()``/
+  ``toUpperCase()`` instead of ICU's ``UCharacter`` methods. Both follow
+  the JVM default locale (Spark calls ICU without a locale, so a ``tr``
+  JVM lowers ``İ`` to ``i`` either way); the option never chose a
+  locale-independent mapping. What differs is the Unicode version of
+  the tables: over every code point from U+0080 to U+2FFFF, alone and
+  in context, the two disagree only on 134 letters that JDK 17's
+  Unicode 13 tables do not case-map (added in Unicode 14-16, e.g.
+  U+A7C0-A7DC, Vithkuqi) and, under an ``lt`` locale, on 42 rare
+  soft-dotted letters (math-alphanumeric i/j and the like) followed by
+  U+0307 when uppercased.
+  Vietnamese, ``đ``/``Đ``, ``İ`` -> ``i̇`` and the final sigma map the
+  same either way.
+- One Python worker pool. Spark keys its Python daemons and workers by
+  their environment. SQL UDF runners add ``SPARK_SIMPLIFIED_TRACEBACK=1``
+  to it and the RDD runner does not, so the first RDD-path Python task
+  (``createDataFrame`` from local rows pickles them through a PythonRDD
+  map) starts a second daemon and forks a second set of workers:
+  1.49-1.66 s after a UDF warm-up, against 0.26-0.37 s with one pool.
+  For ``local`` masters the variable is set in the executor environment
+  too, so both paths share one daemon; RDD-path errors then get the
+  simplified traceback that UDF errors already had.
 """
 
 from __future__ import annotations
@@ -56,11 +87,17 @@ DEFAULT_CONF: dict[str, str] = {
     # executor heap (path-not-payload is the primary defense; this is
     # the backstop).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-    # Parquet staging between stages.
+    # Parquet outputs: the published dataset, CLI stage outputs, stream
+    # sinks and streaming state.
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.parquet.filterPushdown": "true",
     # local mode: silence the progress bar in test output
     "spark.ui.showConsoleProgress": "false",
+    # Java case mapping instead of ICU's: the first lower()/upper() in a
+    # JVM no longer loads ICU's tables (1.35-1.94 s -> 0.18-0.24 s on a
+    # 4-core host). Both follow the JVM default locale; they differ only
+    # on letters newer than Unicode 13 (see the module docstring).
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 #: Daemon entry for ``local`` masters, where the Python daemon is a
@@ -106,6 +143,9 @@ def get_spark(
         conf.setdefault("spark.python.daemon.module", LOCAL_DAEMON_MODULE)
         key = "spark.executorEnv.PYTHONPATH"
         conf[key] = os.pathsep.join(p for p in (conf.get(key), _ENGINE_ROOT) if p)
+        # the SQL UDF runners add this to the worker environment; the RDD
+        # runner carries it only from here, so both share one worker pool
+        conf.setdefault("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
