@@ -1,7 +1,8 @@
 """The local-mode Python daemon entry (``vnavc_spark._pyworker``): its
 zip importer re-reads an archive only when the archive changed, a
 session built outside the repo root still runs Python UDFs through it,
-and SQL UDFs and RDD-path Python share one daemon.
+and SQL UDFs and RDD-path Python share one daemon. The fake-builder
+tests also pin what else ``get_spark`` asks of the session builder.
 """
 
 from __future__ import annotations
@@ -78,13 +79,20 @@ def test_not_installed_from_python_3_13():
 
 
 _TRACEBACK = "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"
+_ICU = "spark.sql.icu.caseMappings.enabled"
+
+
+class _Conf(dict):
+    def set(self, key, value):
+        self[key] = value
 
 
 class _Builder:
-    """Records what ``get_spark`` asks of ``SparkSession.builder``."""
+    """Records what ``get_spark`` asks of ``SparkSession.builder``; it is
+    also the session ``getOrCreate`` returns."""
 
     def __init__(self):
-        self.conf, self.master_ = {}, None
+        self.conf, self.master_ = _Conf(), None
 
     def appName(self, name):
         return self
@@ -129,15 +137,32 @@ def test_daemon_module_only_for_local_masters(monkeypatch, master, env, local):
         assert _TRACEBACK not in conf
 
 
-def _fake_session(monkeypatch, **kwargs):
-    """The conf ``get_spark(**kwargs)`` asks the session builder for."""
+def _fake_session(monkeypatch, language="en", **kwargs):
+    """The conf ``get_spark(**kwargs)`` leaves on the session, in a JVM
+    whose default locale's language is ``language``."""
     monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_Builder()))
+    monkeypatch.setattr(session, "_jvm_language", lambda spark: language)
     return session.get_spark(**kwargs).conf
 
 
 def test_caller_traceback_env_wins(monkeypatch):
     conf = _fake_session(monkeypatch, master="local[2]", extra_conf={_TRACEBACK: "0"})
     assert conf[_TRACEBACK] == "0"
+
+
+@pytest.mark.parametrize(
+    "language, icu",
+    [("en", "false"), ("vi", "false"), ("tr", "true"), ("az", "true"), ("lt", "true")],
+)
+def test_icu_case_mapping_on_only_for_tailored_locales(monkeypatch, language, icu):
+    assert _fake_session(monkeypatch, language=language, master="local[2]")[_ICU] == icu
+
+
+def test_caller_icu_setting_wins_over_locale(monkeypatch):
+    conf = _fake_session(
+        monkeypatch, language="tr", master="local[2]", extra_conf={_ICU: "false"}
+    )
+    assert conf[_ICU] == "false"
 
 
 def test_session_outside_repo_root_runs_udfs(tmp_path):

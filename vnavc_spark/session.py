@@ -33,16 +33,20 @@ use are turned off, both measured in a warmed session on a 4-core host:
   non-ASCII strings with Java's ``String.toLowerCase()``/
   ``toUpperCase()`` instead of ICU's ``UCharacter`` methods. Both follow
   the JVM default locale (Spark calls ICU without a locale, so a ``tr``
-  JVM lowers ``İ`` to ``i`` either way); the option never chose a
-  locale-independent mapping. What differs is the Unicode version of
-  the tables: over every code point from U+0080 to U+2FFFF, alone and
-  in context, the two disagree only on 134 letters that JDK 17's
-  Unicode 13 tables do not case-map (added in Unicode 14-16, e.g.
-  U+A7C0-A7DC, Vithkuqi) and, under an ``lt`` locale, on 42 rare
-  soft-dotted letters (math-alphanumeric i/j and the like) followed by
-  U+0307 when uppercased.
-  Vietnamese, ``đ``/``Đ``, ``İ`` -> ``i̇`` and the final sigma map the
-  same either way.
+  JVM lowers ``İ`` to ``i`` either way). What differs is the Unicode
+  version of the tables: over every code point from U+0080 to U+2FFFF,
+  alone and in context, the two disagree only on 134 letters that JDK
+  17's Unicode 13 tables do not case-map (added in Unicode 14-16, e.g.
+  U+A7C0-A7DC, Vithkuqi). Vietnamese, ``đ``/``Đ``, ``İ`` -> ``i̇`` and
+  the final sigma map the same either way.
+  Locale caveat: ``tr``, ``az`` and ``lt`` tailor case mapping, and
+  each library carries its own tailoring rules. Under ``lt`` the two
+  disagree on 42 more letters (math-alphanumeric i/j and other rare
+  soft-dotted letters followed by U+0307, uppercased); under ``tr`` the
+  scan found no extra difference. When the JVM default language is one
+  of these three and the caller did not set the option, ``get_spark``
+  keeps Spark's default (ICU on) rather than rest on one scan per
+  tailoring, and such a session pays the table load again.
 - One Python worker pool. Spark keys its Python daemons and workers by
   their environment. SQL UDF runners add ``SPARK_SIMPLIFIED_TRACEBACK=1``
   to it and the RDD runner does not, so the first RDD-path Python task
@@ -96,9 +100,18 @@ DEFAULT_CONF: dict[str, str] = {
     # Java case mapping instead of ICU's: the first lower()/upper() in a
     # JVM no longer loads ICU's tables (1.35-1.94 s -> 0.18-0.24 s on a
     # 4-core host). Both follow the JVM default locale; they differ only
-    # on letters newer than Unicode 13 (see the module docstring).
+    # on letters newer than Unicode 13, and under the locales in
+    # TAILORED_CASE_LANGUAGES, where get_spark keeps ICU on (see the
+    # module docstring).
     "spark.sql.icu.caseMappings.enabled": "false",
 }
+
+#: JVM default languages whose case rules are locale-tailored: there
+#: ``get_spark`` leaves ICU case mapping at Spark's default (on) unless
+#: the caller set it.
+TAILORED_CASE_LANGUAGES = frozenset({"tr", "az", "lt"})
+
+_ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
 
 #: Daemon entry for ``local`` masters, where the Python daemon is a
 #: child of this process. It skips the per-task re-read of
@@ -148,4 +161,14 @@ def get_spark(
         conf.setdefault("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if _ICU_CASE_MAPPINGS not in (extra_conf or {}) and (
+        _jvm_language(spark) in TAILORED_CASE_LANGUAGES
+    ):
+        spark.conf.set(_ICU_CASE_MAPPINGS, "true")
+    return spark
+
+
+def _jvm_language(spark: SparkSession) -> str:
+    """The JVM default locale's language, e.g. ``en`` or ``tr``."""
+    return spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
